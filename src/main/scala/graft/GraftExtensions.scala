@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSessionExtensions
   * }}}
   *
   * Injects the native as-of join strategy, the ShingleRewriteRule
-  * optimizer rule, and the custom functions (rolling_hash /
-  * word_shingles / vec_* scalars, top_k_items aggregate). The
+  * optimizer rule, the literal-stable codegen rule
+  * ([[graft.plans.StableCodegen]]), and the custom functions
+  * (rolling_hash / word_shingles / vec_* scalars, top_k_items
+  * aggregate). The
   * session-scoped alternatives (`AsOfJoinNative.register`,
   * `RollingHash.register`, `WordShingles.register`,
   * `VectorExprs.register`, `TopKItems.register`) do the same against
@@ -27,6 +29,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: fuse the composed-HOF shingle spelling into the
     // native WordShingles kernel (Photon/Gluten-style replacement)
     e.injectOptimizerRule(_ => graft.plans.ShingleRewriteRule)
+    // physical rule before whole-stage codegen: constants read from
+    // the generated class's references, LIMIT outside codegen, so a
+    // repeated op shape reuses its compiled classes
+    e.injectColumnar(_ => graft.plans.StableCodegen)
     e.injectFunction((
       new org.apache.spark.sql.catalyst.FunctionIdentifier("rolling_hash"),
       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(

@@ -1,14 +1,19 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 
 /** Measurement harness for the optimization rounds (guide §1):
   * runs named `SparkEntry.queries` under a SparkListener and prints,
   * per query, the top Spark jobs by wall time keyed by job
   * description / short call site — the local[] stand-in for the
-  * Stages tab. Diagnostic only; never on a query path.
+  * Stages tab — and the generated classes the measured run compiled
+  * (Spark's `CodegenMetrics` compile count, Janino time from
+  * `CodeGenerator.compileTime`). Diagnostic only; never on a query
+  * path.
   *
   * Usage: `sbt "runMain graft.Prof dedup_incremental mv_incremental"`
   * with the usual SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS env.
@@ -100,9 +105,13 @@ object Prof {
       jobs.clear(); stages.clear(); execDesc.clear(); execWall.clear()
       execJobs.clear(); stageTasks = 0L; stageCount = 0L
       spark.sparkContext.addSparkListener(listener)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val janino0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       fn(spark, sfDir).count()
       val wall = (System.nanoTime() - t0) / 1e9
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      val janinoMs = (CodeGenerator.compileTime - janino0) / 1e6
       Thread.sleep(500) // let the listener bus drain
       spark.sparkContext.removeSparkListener(listener)
       import scala.jdk.CollectionConverters._
@@ -114,7 +123,8 @@ object Prof {
       }.toSeq.sortBy(-_._3)
       val jobTotal = byDesc.map(_._3).sum
       println(f"===== $name%s wall=$wall%.2fs jobs=${recs.size}%d " +
-        f"jobTime=${jobTotal / 1e3}%.2fs stages=$stageCount%d tasks=$stageTasks%d =====")
+        f"jobTime=${jobTotal / 1e3}%.2fs stages=$stageCount%d tasks=$stageTasks%d " +
+        f"compiles=$compiles%d janinoMs=$janinoMs%.0f =====")
       byDesc.take(30).foreach { case (d, n, tot) =>
         println(f"  ${tot / 1e3}%8.3fs  x$n%-4d $d%.140s")
       }

@@ -859,12 +859,13 @@ object Dedup {
   private def appendBatch(sigsT: graft.tables.GraftTable,
       shT: graft.tables.GraftTable, newSh: DataFrame,
       newBands: DataFrame, batchId: Long,
-      pipelineId: String = "", bands: Int = 4): Unit = {
-    val clustered = clusteredByDocId(newSh)
-    // sigs rows are exactly docs × bands (portableBands explodes one
-    // struct per band), so the shingle count already on hand sizes
-    // the sig files too — no extra action
-    val sized = sizedBands(newBands, batchDocRows(newSh), bands)
+      pipelineId: String, bands: Int): Unit = {
+    // one count sizes both appends: sigs rows are exactly docs × bands
+    // (portableBands explodes one struct per band), so the shingle
+    // count sizes the sig files too — no extra action
+    val docRows = batchDocRows(newSh)
+    val clustered = clusteredByDocId(newSh, docRows)
+    val sized = sizedBands(newBands, docRows, bands)
     if (batchId >= 0L) {
       // the watermark key carries the PIPELINE id: two pipelines
       // (two curationStreams, two checkpoints) sharing one index
@@ -1018,8 +1019,8 @@ object Dedup {
     * shuffle per batch buys O(candidates) verification I/O forever.
     * ~250k docs per file; a single-partition batch skips the shuffle.
     */
-  private def clusteredByDocId(newSh: DataFrame): DataFrame = {
-    val parts = math.max(1L, (batchDocRows(newSh) + 249999L) / 250000L).toInt
+  private def clusteredByDocId(newSh: DataFrame, docRows: Long): DataFrame = {
+    val parts = math.max(1L, (docRows + 249999L) / 250000L).toInt
     if (parts == 1) newSh.coalesce(1).sortWithinPartitions("doc_id")
     else newSh.repartitionByRange(parts, col("doc_id"))
       .sortWithinPartitions("doc_id")
