@@ -40,7 +40,6 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   import GraftTable._
 
   private def logDir: Path = root.resolve("_graft_log")
-  private def filesDir: Path = root.resolve("files")
 
   // ---- log plumbing ----------------------------------------------------
 
@@ -201,73 +200,110 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     } finally Files.deleteIfExists(tmp)
   }
 
-  /** Move Spark-written part files into `files/` under unique names;
-    * returns table-relative paths.
-    */
-  private def adoptStaging(staging: Path): Seq[String] = {
-    Files.createDirectories(filesDir)
-    val parts = GraftTable.listPaths(staging)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val adopted = parts.map { p =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      Files.move(p, filesDir.resolve(name))
-      s"files/$name"
-    }
-    deleteRecursively(staging)
-    adopted
-  }
-
-  /** Files written by one staging round plus, for partitioned tables,
-    * each file's partition-column values (Hive-style strings;
-    * `__HIVE_DEFAULT_PARTITION__` encodes null).
+  /** Files written by one staging round: data (or deletion-vector)
+    * files with, on a partitioned table, each data file's partition
+    * values (Hive-style strings; `__HIVE_DEFAULT_PARTITION__` encodes
+    * null), and the change-data (CDC) files of a tagged write.
     */
   private[tables] case class Written(files: Seq[String],
-      partValues: Map[String, Map[String, String]])
+      partValues: Map[String, Map[String, String]],
+      cdc: Seq[String] = Nil)
 
-  private def writeData(df: DataFrame): Written =
-    writeData(df, partitionColumnsAt(latestVersion),
-      columnMapAt(latestVersion), bucketSpecAt(latestVersion))
+  /** [[writeData]] under the table's layout at version `v`. */
+  private def writeData(df: DataFrame, v: Long): Written =
+    writeData(df, partitionColumnsAt(v), columnMapAt(v), bucketSpecAt(v))
 
-  /** Stage and adopt `df`. With partition columns the staging write
-    * goes through `partitionBy` on DUPLICATED columns (`__gp_<col>`),
-    * so the layout is partition-aligned — no data file ever spans two
-    * partition tuples — while the data files keep the full schema
-    * (self-describing: every read/DML path scans them unchanged).
-    * Partition values are parsed from the staging directory names and
-    * recorded in the commit, which is what makes dynamic partition
-    * overwrite exact and partition pruning type-faithful for values
-    * (e.g. non-ASCII strings) the footer-stats path must drop.
+  /** The one staging write: Spark writes `df` to a staging directory
+    * and every leaf file is adopted under a unique name in one walk.
+    *
+    * `df` carries LOGICAL names; files always store PHYSICAL ones
+    * (`cm`), CDC files included — partition and bucket columns are
+    * rename-immutable, so they need no translation. Three optional
+    * levels shape the staging layout:
+    *  - `__tag` (DML): a frame with this column lands its rows in
+    *    `__tag=d` (rewritten data) and `__tag=c` (the commit's
+    *    write-time change set, `_change_type` set) directories, so one
+    *    scan and one write job produce both; `__tag=c` leaves go to
+    *    `cdc/`, and the data files carry a physically present but
+    *    all-null `_change_type` column (every read path scans under an
+    *    explicit schema, and footer stats skip all-null columns).
+    *  - `__gp_<col>` (partitioned tables): `partitionBy` on DUPLICATED
+    *    partition columns, so no data file spans two partition tuples
+    *    while the files keep the full schema (self-describing: every
+    *    read/DML path scans them unchanged). Each data file's tuple
+    *    parses from its directory names and is recorded in the commit,
+    *    which makes dynamic partition overwrite exact and partition
+    *    pruning type-faithful for values (e.g. non-ASCII strings) the
+    *    footer-stats path must drop.
+    *  - bucketing: `repartition(n, cols)` IS Spark's bucket-id function
+    *    (pmod(murmur3(cols), n) — HashPartitioning's
+    *    partitionIdExpression), so the writer's task index (the
+    *    `part-NNNNN` prefix) is the bucket id, carried into the adopted
+    *    name in Spark's own bucket-file suffix
+    *    ([[org.apache.spark.sql.execution.datasources.BucketingUtils]]);
+    *    every write path re-buckets, keeping the table join-aligned.
+    * A frame without `__tag` on an unpartitioned, unbucketed layout is
+    * a plain `write.parquet`. Leaves outside `__tag=c` go to `dir`
+    * (`files` for data, `dv` for deletion vectors, `cdc` for a change
+    * set written on its own); bloom sidecars cover `files/` only.
     */
   private def writeData(df: DataFrame, pcols: Seq[String],
       cm: Map[String, String] = Map.empty,
-      buckets: Option[(Seq[String], Int)] = None): Written = {
-    // incoming frames carry LOGICAL names; files always store PHYSICAL
-    // (partition and bucket columns are rename-immutable, so they
-    // need no translation)
+      buckets: Option[(Seq[String], Int)] = None,
+      dir: String = "files"): Written = {
+    import org.apache.spark.sql.execution.datasources.BucketingUtils
     val out = if (cm.isEmpty) df
       else df.select(df.columns.map(c =>
         col(s"`$c`").as(cm.getOrElse(c, c))).toIndexedSeq: _*)
-    val staging = root.resolve(s".staging-${UUID.randomUUID()}")
-    val written = buckets match {
-      case Some((bcols, n)) =>
-        // repartition(n, cols) IS Spark's bucket-id function
-        // (pmod(murmur3(cols), n) — HashPartitioning's
-        // partitionIdExpression), so the staged partition index is
-        // the bucket id; every write path re-buckets, keeping the
-        // whole table join-aligned forever
-        out.repartition(n, bcols.map(c => col(s"`$c`")): _*)
-          .write.parquet(staging.toString)
-        adoptBucketedStaging(staging)
-      case None if pcols.isEmpty =>
-        out.write.parquet(staging.toString)
-        Written(adoptStaging(staging), Map.empty)
-      case None =>
-        val dup = pcols.foldLeft(out)((d, c) => d.withColumn(s"__gp_$c", col(c)))
-        dup.write.partitionBy(pcols.map("__gp_" + _): _*).parquet(staging.toString)
-        adoptPartitionedStaging(staging, pcols)
+    val dup = pcols.foldLeft(out)((d, c) =>
+      d.withColumn(s"__gp_$c", col(s"`$c`")))
+    val shaped = buckets.fold(dup) { case (bcols, n) =>
+      dup.repartition(n, bcols.map(c => col(s"`$c`")): _*)
     }
-    writeBlooms(written.files)
-    written
+    val tagged = df.columns.contains("__tag")
+    val levels = (if (tagged) Seq("__tag") else Nil) ++ pcols.map("__gp_" + _)
+    val staging = root.resolve(s".staging-${UUID.randomUUID()}")
+    (if (levels.isEmpty) shaped.write
+     else shaped.write.partitionBy(levels: _*)).parquet(staging.toString)
+    Files.createDirectories(root.resolve(dir))
+    if (tagged) Files.createDirectories(root.resolve("cdc"))
+    val leaves = {
+      val s = Files.walk(staging)
+      try s.iterator().asScala
+        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
+          Files.isRegularFile(p)).toList
+      finally s.close()
+    }
+    val partNum = """part-(\d+)""".r
+    val adopted = leaves.map { p =>
+      val rel = staging.relativize(p)
+      val segs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
+      val isCdc = segs.contains("__tag=c")
+      val suffix = if (isCdc || buckets.isEmpty) "" else
+        BucketingUtils.bucketIdToString(
+          partNum.findFirstMatchIn(p.getFileName.toString)
+            .map(_.group(1).toInt)
+            .getOrElse(throw new IllegalStateException(
+              s"cannot derive bucket id from staged file ${p.getFileName}")))
+      val vals = segs.filter(_.startsWith("__gp_")).map { seg =>
+        val i = seg.indexOf('=')
+        seg.substring(0, i).stripPrefix("__gp_") ->
+          unescapePathName(seg.substring(i + 1))
+      }.toMap
+      require(isCdc || pcols.forall(vals.contains),
+        s"staging layout missing partition value(s) in $rel")
+      val target = if (isCdc) "cdc" else dir
+      val name = s"${UUID.randomUUID()}$suffix.parquet"
+      Files.move(p, root.resolve(target).resolve(name))
+      (isCdc, s"$target/$name", vals)
+    }
+    deleteRecursively(staging)
+    val (cdc, data) = adopted.partition(_._1)
+    val files = data.map(_._2)
+    if (dir == "files") writeBlooms(files)
+    Written(files,
+      if (pcols.isEmpty) Map.empty else data.map(a => a._2 -> a._3).toMap,
+      cdc.map(_._2))
   }
 
   /** BLOOM FILTER INDEX declaration, from TBLPROPERTIES:
@@ -306,196 +342,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     */
   def rebuildBloomIndex(): Unit = writeBlooms(currentFiles)
 
-  /** Adopt a bucket-repartitioned staging dir: the writer's task
-    * index (the `part-NNNNN` prefix) is the bucket id; adopted names
-    * carry it in Spark's own bucket-file suffix
-    * ([[org.apache.spark.sql.execution.datasources.BucketingUtils]]),
-    * which is how the bucketed scan recovers each file's bucket.
-    */
-  private def adoptBucketedStaging(staging: Path): Written = {
-    import org.apache.spark.sql.execution.datasources.BucketingUtils
-    Files.createDirectories(filesDir)
-    val partNum = """part-(\d+)""".r
-    val parts = GraftTable.listPaths(staging)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val adopted = parts.map { p =>
-      val id = partNum.findFirstMatchIn(p.getFileName.toString)
-        .map(_.group(1).toInt)
-        .getOrElse(throw new IllegalStateException(
-          s"cannot derive bucket id from staged file ${p.getFileName}"))
-      val name =
-        s"${UUID.randomUUID()}${BucketingUtils.bucketIdToString(id)}.parquet"
-      Files.move(p, filesDir.resolve(name))
-      s"files/$name"
-    }
-    deleteRecursively(staging)
-    Written(adopted, Map.empty)
-  }
-
   private def unescapePathName(s: String): String =
     GraftTable.unescapePathName(s)
-
-  private def adoptPartitionedStaging(staging: Path,
-      pcols: Seq[String]): Written = {
-    Files.createDirectories(filesDir)
-    val leaves = Files.walk(staging).iterator().asScala
-      .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-        Files.isRegularFile(p)).toSeq
-    val adopted = leaves.map { p =>
-      val rel = staging.relativize(p)
-      val vals = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
-        .filter(_.contains('='))
-        .map { seg =>
-          val i = seg.indexOf('=')
-          seg.substring(0, i).stripPrefix("__gp_") ->
-            unescapePathName(seg.substring(i + 1))
-        }.toMap
-      require(pcols.forall(vals.contains),
-        s"staging layout missing partition value(s) in $rel")
-      val name = s"${UUID.randomUUID()}.parquet"
-      Files.move(p, filesDir.resolve(name))
-      (s"files/$name", vals)
-    }
-    deleteRecursively(staging)
-    Written(adopted.map(_._1), adopted.toMap)
-  }
-
-  /** One-pass DML write (optimization guide §1.2/§2.3 — fewer passes
-    * over the touched files, one write job instead of two): stages
-    * the data rewrite AND the commit's write-time CDC change set from
-    * a SINGLE scan. `df` carries every output row tagged by `__tag`
-    * ("d" = rewritten data row, "c" = CDC row with `_change_type`
-    * set); `partitionBy("__tag")` lands the two classes in disjoint
-    * staging directories, adopted into `files/` and `cdc/`
-    * respectively. Callers gate on [[canCombineCdcWrite]] — the
-    * combined staging layout can't carry a bucket level, and under
-    * column mapping data files store physical names while CDC files
-    * store logical ones, so those tables keep the two-pass spelling.
-    * PARTITIONED tables combine too: the staging carries the table's
-    * partition columns as a second `partitionBy` level under `__tag`
-    * (duplicated `__gp_<col>` copies, exactly the writeData layout),
-    * and data files' partition values parse from the staging
-    * directory names as usual — CDC files need no partition values
-    * (the two-pass writeCdc never recorded any either). A table whose
-    * OWN schema claims a reserved staging name (`_change_type`,
-    * `__tag`, or a `__pre_` prefix the combined UPDATE projection
-    * uses) keeps the two-pass spelling — the tagged projection would
-    * silently clobber (or ambiguously duplicate) the user's column.
-    * The rewritten data files carry a physically present but ALL-NULL
-    * `_change_type` column: every read path scans under an explicit
-    * schema (it is invisible), and footer stats skip all-null columns
-    * (pruning is unaffected).
-    */
-  private def canCombineCdcWrite: Boolean =
-    canCombineCdcWriteAt(latestVersion)
-
-  /** Version-pinned form: DML paths that stage against an older read
-    * version (mergeFromRead) evaluate the layout gate AT that version,
-    * so the write spelling and the staged snapshot can never disagree
-    * (the conflict matrix also rejects layout changes in (base,
-    * latest], but the gate must not depend on that non-local fact).
-    */
-  private def canCombineCdcWriteAt(v: Long): Boolean =
-    bucketSpecAt(v).isEmpty &&
-      columnMapAt(v).isEmpty &&
-      !schemaAt(v).fieldNames.exists(n =>
-        n == "_change_type" || n == "__tag" || n.startsWith("__pre_"))
-
-  private def writeDataWithCdc(df: DataFrame,
-      pcols: Seq[String] = Nil): (Written, Seq[String]) = {
-    val staging = root.resolve(s".staging-${UUID.randomUUID()}")
-    // partition columns ride as duplicated __gp_ copies below __tag
-    // (the writeData layout): the originals stay physically present
-    // in every file, and each data file's partition tuple parses from
-    // its staging directory names
-    val dup = pcols.foldLeft(df)((d, c) =>
-      d.withColumn(s"__gp_$c", col(s"`$c`")))
-    dup.write.partitionBy("__tag" +: pcols.map("__gp_" + _): _*)
-      .parquet(staging.toString)
-    Files.createDirectories(filesDir)
-    val cdcDir = root.resolve("cdc")
-    Files.createDirectories(cdcDir)
-    val parts = {
-      val s = Files.walk(staging)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet") &&
-          Files.isRegularFile(p)).toList
-      finally s.close()
-    }
-    val adopted = parts.map { p =>
-      val rel = staging.relativize(p)
-      val segs = (0 until rel.getNameCount - 1).map(rel.getName(_).toString)
-      val isCdc = segs.contains("__tag=c")
-      val name = s"${UUID.randomUUID()}.parquet"
-      if (isCdc) { Files.move(p, cdcDir.resolve(name)); Left(s"cdc/$name") }
-      else {
-        val vals = segs.filter(_.contains('='))
-          .flatMap { seg =>
-            val i = seg.indexOf('=')
-            val k = seg.substring(0, i)
-            if (k == "__tag") None
-            else Some(k.stripPrefix("__gp_") ->
-              unescapePathName(seg.substring(i + 1)))
-          }.toMap
-        require(pcols.forall(vals.contains),
-          s"staging layout missing partition value(s) in $rel")
-        Files.move(p, filesDir.resolve(name))
-        Right((s"files/$name", vals))
-      }
-    }
-    deleteRecursively(staging)
-    val dataFiles = adopted.collect { case Right((f, _)) => f }
-    writeBlooms(dataFiles)
-    (Written(dataFiles,
-      if (pcols.isEmpty) Map.empty
-      else adopted.collect { case Right(fv) => fv }.toMap),
-      adopted.collect { case Left(f) => f })
-  }
-
-  /** Write a commit's row-level change set (tagged with
-    * `_change_type`) under `cdc/` — Delta's write-time CHANGE DATA
-    * FEED files. Cost is one extra write over the commit's blast
-    * radius; every later changeFeed read skips the 2×EXCEPT ALL
-    * reconstruction entirely. Unreferenced files from failed commits
-    * are harmless orphans.
-    */
-  private def writeCdc(df: DataFrame): Seq[String] = {
-    val staging = root.resolve(s".staging-${UUID.randomUUID()}")
-    df.write.parquet(staging.toString)
-    val cdcDir = root.resolve("cdc")
-    Files.createDirectories(cdcDir)
-    val parts = GraftTable.listPaths(staging)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val adopted = parts.map { p =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      Files.move(p, cdcDir.resolve(name))
-      s"cdc/$name"
-    }
-    deleteRecursively(staging)
-    adopted
-  }
-
-  /** Write a DELETION VECTOR file under `dv/`: rows of
-    * (file_path, pos) naming deleted row positions in immutable data
-    * files — the merge-on-read tombstone set. Parquet keeps it
-    * mergeable and scannable; at 100 TB the DV set is orders of
-    * magnitude smaller than the data it masks.
-    */
-  private def writeDv(df: DataFrame): Seq[String] = {
-    val staging = root.resolve(s".staging-${UUID.randomUUID()}")
-    df.write.parquet(staging.toString)
-    val dvDir = root.resolve("dv")
-    Files.createDirectories(dvDir)
-    val parts = GraftTable.listPaths(staging)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-    val adopted = parts.map { p =>
-      val name = s"${UUID.randomUUID()}.parquet"
-      Files.move(p, dvDir.resolve(name))
-      s"dv/$name"
-    }
-    deleteRecursively(staging)
-    adopted
-  }
 
   /** Scan `files` with the row's physical address attached — schema
     * columns plus `__fp` (absolute file path, from the parquet
@@ -1187,6 +1035,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         s"no such column '$oldName' (columns: ${schema.fieldNames.mkString(", ")})"))
     require(!schema.fieldNames.exists(_.equalsIgnoreCase(newName)),
       s"column '$newName' already exists")
+    GraftTable.requireUnreserved(Seq(newName))
     require(!partitionColumnsAt(base).contains(field.name),
       s"cannot rename partition column '${field.name}'")
     require(!bucketSpecAt(base).exists(_._1.contains(field.name)),
@@ -1344,7 +1193,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       case None =>
         val data = readFilesDvAware(small, schemaAt(base), dvAt(base),
           columnMapAt(base)).coalesce(n)
-        val w = writeData(data)
+        val w = writeData(data, base)
         commitResolved("COMPACT", base, small.toSet, w.files,
           None, readsTable = false, schemaAt(base),
           Map("numRewrittenFiles" -> small.size.toLong),
@@ -2044,6 +1893,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (newCols.nonEmpty && !evolve)
       throw new IllegalArgumentException(
         s"schema enforcement: new columns ${newCols.map(_.name).mkString(",")} (use evolve=true)")
+    GraftTable.requireUnreserved(newCols.map(_.name).toSeq)
     val missing = cur.fields.filterNot(f => incoming.exists(_.name == f.name))
     require(missing.isEmpty || evolve,
       s"schema enforcement: missing columns ${missing.map(_.name).mkString(",")}")
@@ -2257,6 +2107,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // (continuing the high water), generated columns compute/validate
     val (dfIn, idMetrics, idCleanup) = injectWriteColumns(df)
     try {
+      GraftTable.requireUnreserved(dfIn.schema.fieldNames.toSeq)
       enforceConstraints(dfIn)
       // a full rewrite leaves no old files behind, so the logical
       // names can become physical again — reset the column map (also
@@ -2307,10 +2158,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       s"file(s) missing partition metadata: ${orphans.take(3).mkString(", ")}")
     val replaced = filesAt(base).filter(f =>
       newTuples.contains(pcols.map(pv(f)(_))))
-    val cdc = writeCdc(
+    val cdc = writeData(
       readFilesDvAware(replaced, schema, dvAt(base), columnMapAt(base))
         .withColumn("_change_type", lit("delete"))
-        .unionByName(aligned.withColumn("_change_type", lit("insert"))))
+        .unionByName(aligned.withColumn("_change_type", lit("insert"))),
+      Nil, columnMapAt(base), dir = "cdc").files
     // conflict read set: the replaced partitions — a concurrent
     // rewrite producing rows there invalidates the replacement
     // (write-write on the slice), while commits touching only OTHER
@@ -2349,41 +2201,27 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       s"replaceWhere: $bad incoming row(s) do not satisfy the predicate")
     val touched = touchedFiles(cond)
     val touchedDf = readFilesDvAware(touched, schema, dvAt(base), columnMapAt(base))
-    // one-pass spellings where the layout allows (guide §1.2): the
-    // touched files feed survivors (data) + deleted images (CDC) in
-    // one tagged write (that input IS scanned once), and the incoming
-    // slice feeds its data files + insert images in another — two
-    // write jobs instead of three. NOTE the incoming frame is still
+    // two tagged writes: the touched files feed
+    // survivors (data) + deleted images (CDC) in one (that input IS
+    // scanned once), and the incoming slice feeds its data files +
+    // insert images in the other. NOTE the incoming frame is
     // EVALUATED twice (`aligned` unioned with itself inside the one
-    // job), same as the old two-pass path — a non-deterministic
-    // source can diverge between its data rows and its CDC insert
-    // images on either spelling. CDC files legally split across
-    // commits' write calls (the commit records the concatenation).
-    val (wSurv, wNew, cdc) = if (canCombineCdcWriteAt(base)) {
-      val pcols = partitionColumnsAt(base)
-      val (ws, cdcDel) = if (touched.isEmpty) (Written(Nil, Map.empty), Nil)
-        else writeDataWithCdc(touchedDf
-          .withColumn("_change_type",
-            when(coalesce(cond, lit(false)), lit("delete")))
-          .withColumn("__tag",
-            when(col("_change_type").isNotNull, lit("c")).otherwise(lit("d"))),
-          pcols)
-      val (wn, cdcIns) = writeDataWithCdc(
-        aligned.withColumn("_change_type", lit(null).cast("string"))
-          .withColumn("__tag", lit("d"))
-          .unionByName(aligned
-            .withColumn("_change_type", lit("insert").cast("string"))
-            .withColumn("__tag", lit("c"))), pcols)
-      (ws, wn, cdcDel ++ cdcIns)
-    } else {
-      val ws = if (touched.isEmpty) Written(Nil, Map.empty)
-        else writeData(touchedDf.where(!coalesce(cond, lit(false))))
-      val wn = writeData(aligned)
-      (ws, wn, writeCdc(
-        touchedDf.where(coalesce(cond, lit(false)))
-          .withColumn("_change_type", lit("delete"))
-          .unionByName(aligned.withColumn("_change_type", lit("insert")))))
-    }
+    // job) — a non-deterministic source can diverge between its data
+    // rows and its CDC insert images. CDC files legally split across
+    // a commit's write calls (the commit records the concatenation).
+    val wSurv = if (touched.isEmpty) Written(Nil, Map.empty)
+      else writeData(touchedDf
+        .withColumn("_change_type",
+          when(coalesce(cond, lit(false)), lit("delete")))
+        .withColumn("__tag",
+          when(col("_change_type").isNotNull, lit("c")).otherwise(lit("d"))),
+        base)
+    val wNew = writeData(
+      aligned.withColumn("_change_type", lit(null).cast("string"))
+        .withColumn("__tag", lit("d"))
+        .unionByName(aligned
+          .withColumn("_change_type", lit("insert").cast("string"))
+          .withColumn("__tag", lit("c"))), base)
     commitResolved("REPLACE_WHERE", base,
       touched.toSet, wSurv.files ++ wNew.files, Some(cond),
       readsTable = false, schema,
@@ -2391,7 +2229,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         "numAddedFiles" -> wNew.files.size.toLong) ++ idMetrics,
       collectStats(wSurv.files ++ wNew.files,
         rewriteStampZone(touched, base, sessionValues = true)),
-      cdcFiles = Some(cdc),
+      cdcFiles = Some(wSurv.cdc ++ wNew.cdc),
       newPartValues = wSurv.partValues ++ wNew.partValues,
       idHwBefore = idHwBefore)
     } finally idCleanup()
@@ -2758,31 +2596,20 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // survive into the rewrite nor re-appear in the CDC delete set
     val touchedDf = readFilesDvAware(touched, schemaAt(base), dvAt(base),
       columnMapAt(base))
-    // one-pass spelling where the layout allows it: every touched row
-    // lands exactly once — kept rows as data, cond rows as the CDC
-    // delete set — in a single scan + single tagged write (the old
-    // spelling scanned the touched files twice and ran two write jobs)
-    val (w, cdc) = if (canCombineCdcWriteAt(base)) {
-      val tagged = touchedDf
-        .withColumn("_change_type",
-          when(coalesce(cond, lit(false)), lit("delete")))
-        .withColumn("__tag",
-          when(col("_change_type").isNotNull, lit("c")).otherwise(lit("d")))
-      writeDataWithCdc(tagged, partitionColumnsAt(base))
-    } else {
-      val kept = touchedDf.where(!coalesce(cond, lit(false)))
-      val wd = writeData(kept)
-      // write-time CDC: the deleted rows are exactly the cond-matching
-      // rows of the touched files — one extra pruned scan, no EXCEPT ALL
-      (wd, writeCdc(touchedDf.where(coalesce(cond, lit(false)))
-        .withColumn("_change_type", lit("delete"))))
-    }
+    // one scan + one tagged write: every touched row lands exactly
+    // once — kept rows as data, cond rows as the CDC delete set
+    val w = writeData(touchedDf
+      .withColumn("_change_type",
+        when(coalesce(cond, lit(false)), lit("delete")))
+      .withColumn("__tag",
+        when(col("_change_type").isNotNull, lit("c")).otherwise(lit("d"))),
+      base)
     maybeAutoCompact(commitResolved("DELETE", base,
       touched.toSet, w.files, Some(cond), readsTable = false,
       schemaAt(base),
       Map("numRewrittenFiles" -> touched.size.toLong),
       collectStats(w.files, partitionStampZones(touched, base, w.partValues)),
-      cdcFiles = Some(cdc), newPartValues = w.partValues))
+      cdcFiles = Some(w.cdc), newPartValues = w.partValues))
   }
 
   /** MERGE-ON-READ DELETE via DELETION VECTORS (Delta's DV feature):
@@ -2829,10 +2656,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           Some(cond), readsTable = false, schema,
           Map("numDeletedRows" -> 0L), cdcFiles = Some(Nil),
           dvOut = (_, _) => None)
-      val newDv = writeDv(
-        victims.select(col("__fp").as("file_path"), col("__pos").as("pos")))
-      val cdc = writeCdc(victims.drop("__fp", "__pos")
-        .withColumn("_change_type", lit("delete")))
+      val newDv = writeData(
+        victims.select(col("__fp").as("file_path"), col("__pos").as("pos")),
+        Nil, dir = "dv").files
+      val cdc = writeData(victims.drop("__fp", "__pos")
+        .withColumn("_change_type", lit("delete")),
+        Nil, columnMapAt(base), dir = "cdc").files
       val masked = perFile.iterator.map(_.getString(0)).toSet
       commitResolved("DELETE_DV", base, Set.empty, Nil,
         Some(cond), readsTable = false, schema,
@@ -2877,8 +2706,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           Some(cond), readsTable = false, schema,
           Map("numUpdatedRows" -> 0L), cdcFiles = Some(Nil),
           dvOut = (_, _) => None)
-      val newDv = writeDv(
-        victims.select(col("__fp").as("file_path"), col("__pos").as("pos")))
+      val newDv = writeData(
+        victims.select(col("__fp").as("file_path"), col("__pos").as("pos")),
+        Nil, dir = "dv").files
       // ONE projection: every assignment sees the pre-update row even
       // when another assignment targets a column it references
       val applied0 = victims.select(schema.fieldNames.map { f =>
@@ -2896,25 +2726,17 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       }
       enforceConstraints(applied)
       // post-update rows and both CDC images all derive from the
-      // PERSISTED victims — one tagged write where the layout allows
-      // (guide §1.2: one write job instead of two over the same cache)
-      val (w, cdc) = if (canCombineCdcWriteAt(base)) {
-        writeDataWithCdc(applied
-          .withColumn("_change_type", lit(null).cast("string"))
-          .withColumn("__tag", lit("d"))
-          .unionByName(victims.drop("__fp", "__pos")
-            .withColumn("_change_type", lit("update_preimage"))
-            .withColumn("__tag", lit("c")))
-          .unionByName(applied
-            .withColumn("_change_type", lit("update_postimage"))
-            .withColumn("__tag", lit("c"))), partitionColumnsAt(base))
-      } else {
-        (writeData(applied), writeCdc(
-          victims.drop("__fp", "__pos")
-            .withColumn("_change_type", lit("update_preimage"))
-            .unionByName(applied
-              .withColumn("_change_type", lit("update_postimage")))))
-      }
+      // PERSISTED victims — one tagged write (one write job over the
+      // cache, not two)
+      val w = writeData(applied
+        .withColumn("_change_type", lit(null).cast("string"))
+        .withColumn("__tag", lit("d"))
+        .unionByName(victims.drop("__fp", "__pos")
+          .withColumn("_change_type", lit("update_preimage"))
+          .withColumn("__tag", lit("c")))
+        .unionByName(applied
+          .withColumn("_change_type", lit("update_postimage"))
+          .withColumn("__tag", lit("c"))), base)
       // conflict write-set = the tombstoned files: a racer rewriting
       // one would resurrect the pre-update rows alongside our appends
       val masked = perFile.iterator.map(_.getString(0)).toSet
@@ -2931,7 +2753,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           "numAddedFiles" -> w.files.size.toLong),
         collectStats(w.files,
           rewriteStampZone(maskedRel, base, sessionValues = gensTouched)),
-        cdcFiles = Some(cdc),
+        cdcFiles = Some(w.cdc),
         dvOut = (b, _) => Some(dvAt(b) ++ newDv),
         conflictRemoves = Some(maskedRel.toSet),
         newPartValues = w.partValues)
@@ -2955,7 +2777,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // no longer listed — purge only current ones
     val touched = matchHits(filesAt(base), masked)
     val kept = readFilesDvAware(touched, schema, dv, columnMapAt(base))
-    val w = if (touched.isEmpty) Written(Nil, Map.empty) else writeData(kept)
+    val w = if (touched.isEmpty) Written(Nil, Map.empty) else writeData(kept, base)
     // reads only the files it rewrites — concurrent appends commute
     commitResolved("PURGE", base, touched.toSet, w.files,
       None, readsTable = false, schema,
@@ -3001,15 +2823,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // SET against it — a set-column appearing in cond (or in another
     // assignment) must see the pre-update value
     val marked = cur.withColumn("__hit", coalesce(cond, lit(false)))
-    // one-pass eligibility decided up front: the combined spelling
-    // carries a `__pre_<f>` copy of every column through the post-
-    // update projection so one scan can emit the rewrite AND the CDC
-    // pre/post images (guide §1.2 — the two-pass spelling scanned the
-    // touched files three times and ran two write jobs)
-    val combine = canCombineCdcWriteAt(base)
+    // a `__pre_<f>` copy of every column rides through the post-update
+    // projection, so one scan emits the rewrite AND the CDC pre/post
+    // images (one scan, one write job)
     val fields = schemaAt(base).fieldNames.toSeq
-    val preCols = if (combine) fields.map(f => col(s"`$f`").as(s"__pre_$f"))
-      else Nil
+    val preCols = fields.map(f => col(s"`$f`").as(s"__pre_$f"))
     // ONE projection: every assignment sees pre-update values even
     // when another assignment targets a column it references
     val applied0 = marked.select(((schemaAt(base).fieldNames.map { f =>
@@ -3037,35 +2855,24 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // untouched files were validated when they landed; the rewritten
     // rows are what an UPDATE can push into a violating state
     enforceConstraints(updated)
-    // write-time CDC: pre/post images of exactly the cond rows.
-    // Delta semantics: identity assignments (SET x = x) still emit
-    // pre/post pairs here; the EXCEPT ALL fallback cancels them, so
-    // the two paths differ only for value-preserving updates
-    val (w, cdc) = if (combine) {
-      // single scan: each row explodes into the rewrite row (always)
-      // plus, for hit rows, the pre/post CDC images
-      val ctNull = lit(null).cast("string")
-      val dataS = struct((fields.map(f => col(s"`$f`")) :+
-        ctNull.as("_change_type")).toIndexedSeq: _*)
-      val preS = struct((fields.map(f => col(s"`__pre_$f`").as(f)) :+
-        lit("update_preimage").cast("string").as("_change_type")).toIndexedSeq: _*)
-      val postS = struct((fields.map(f => col(s"`$f`")) :+
-        lit("update_postimage").cast("string").as("_change_type")).toIndexedSeq: _*)
-      val tagged = applied.select(explode(
-          when(col("__hit"), array(dataS, preS, postS))
-            .otherwise(array(dataS))).as("__r"))
-        .select(col("__r.*"))
-        .withColumn("__tag",
-          when(col("_change_type").isNull, lit("d")).otherwise(lit("c")))
-      writeDataWithCdc(tagged, partitionColumnsAt(base))
-    } else {
-      // two extra file-pruned scans at write, zero shuffles at read
-      (writeData(updated), writeCdc(
-        marked.where(col("__hit")).drop("__hit")
-          .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(applied.where(col("__hit")).drop("__hit")
-            .withColumn("_change_type", lit("update_postimage")))))
-    }
+    // write-time CDC: each row explodes into the rewrite row (always)
+    // plus, for hit rows, the pre/post images. Delta semantics:
+    // identity assignments (SET x = x) still emit pre/post pairs here;
+    // the EXCEPT ALL fallback cancels them, so the two paths differ
+    // only for value-preserving updates
+    val ctNull = lit(null).cast("string")
+    val dataS = struct((fields.map(f => col(s"`$f`")) :+
+      ctNull.as("_change_type")).toIndexedSeq: _*)
+    val preS = struct((fields.map(f => col(s"`__pre_$f`").as(f)) :+
+      lit("update_preimage").cast("string").as("_change_type")).toIndexedSeq: _*)
+    val postS = struct((fields.map(f => col(s"`$f`")) :+
+      lit("update_postimage").cast("string").as("_change_type")).toIndexedSeq: _*)
+    val w = writeData(applied.select(explode(
+        when(col("__hit"), array(dataS, preS, postS))
+          .otherwise(array(dataS))).as("__r"))
+      .select(col("__r.*"))
+      .withColumn("__tag",
+        when(col("_change_type").isNull, lit("d")).otherwise(lit("c"))), base)
     // session-clock generated values only materialize when the SET
     // touches a generated column (explicitly, or via its inputs and
     // the recompute) — an unrelated UPDATE keeps its inputs' zone
@@ -3080,7 +2887,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       Map("numRewrittenFiles" -> touched.size.toLong),
       collectStats(w.files,
         rewriteStampZone(touched, base, sessionValues = gensTouched)),
-      cdcFiles = Some(cdc), newPartValues = w.partValues))
+      cdcFiles = Some(w.cdc), newPartValues = w.partValues))
   }
 
   /** MERGE INTO target USING source ON key — the default clause set:
@@ -3562,23 +3369,17 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     }
     enforceConstraints(newData)
     // the CDC change set below derives from the SAME persisted
-    // `tagged`/`src` frames as the data rewrite — where the layout
-    // allows, land both in one tagged write (one write job instead
-    // of two; guide §1.2). The spelling must stay lazy: build the
-    // CDC frame first, write once.
-    // cm may gain FRESH entries during an evolving merge (a re-added
-    // dropped column maps to a new physical name) — those writes must
-    // go through the column-translating writeData, so the combined
-    // path additionally requires an empty effective column map
-    val combineMerge = canCombineCdcWriteAt(base) && cm.isEmpty
+    // `tagged`/`src` frames as the data rewrite — both land in one
+    // tagged write (one write job, not two). The
+    // spelling must stay lazy: build the CDC frame first, write once.
     // merge-on-read tombstones: every accepted matched/BY SOURCE
     // row's physical address — O(accepted rows) written
     val morIdx = (deleteIdx ++ updateIdx).map(Integer.valueOf)
     val morVictims = if (!mor || morIdx.isEmpty) None
       else Some(tagged.where(col("__action").isin(morIdx: _*)))
-    val newDv = morVictims.map(v => writeDv(
-      v.select(col("__fp").as("file_path"), col("__pos").as("pos"))))
-      .getOrElse(Nil)
+    val newDv = morVictims.map(v => writeData(
+      v.select(col("__fp").as("file_path"), col("__pos").as("pos")),
+      Nil, dir = "dv").files).getOrElse(Nil)
     // write-write conflict set = the tombstoned files: a racer
     // rewriting one would resurrect our pre-merge rows
     val maskedRel = morVictims.map(v => matchHits(filesAt(base),
@@ -3599,16 +3400,14 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val insertedRows = inserts.map(tag(_, "insert"))
     val cdcAll = (Seq(updatedPre, updatedPost, deletedRows) ++ insertedRows)
       .reduce(_ unionByName _)
-    val (w, cdc) = if (combineMerge) {
-      val taggedAll = newData
+    // cm may hold FRESH entries from an evolving merge (a re-added
+    // dropped column maps to a new physical name), so the write takes
+    // the effective map, not base's
+    val w = writeData(newData
         .withColumn("_change_type", lit(null).cast("string"))
         .withColumn("__tag", lit("d"))
-        .unionByName(cdcAll.withColumn("__tag", lit("c")))
-      writeDataWithCdc(taggedAll, partitionColumnsAt(base))
-    } else {
-      (writeData(newData, partitionColumnsAt(base), cm,
-        bucketSpecAt(base)), writeCdc(cdcAll))
-    }
+        .unionByName(cdcAll.withColumn("__tag", lit("c"))),
+      partitionColumnsAt(base), cm, bucketSpecAt(base))
     tagged.unpersist()
     src.unpersist()
     // conflict read set: the source-key envelope computed above —
@@ -3630,7 +3429,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
             "numAddedFiles" -> w.files.size.toLong) ++ idMetrics,
           collectStats(w.files,
             rewriteStampZone(maskedRel, base, sessionValues = true)),
-          cdcFiles = Some(cdc),
+          cdcFiles = Some(w.cdc),
           dvOut = (b, _) => Some(dvAt(b) ++ newDv),
           conflictRemoves = Some(maskedRel.toSet),
           newPartValues = w.partValues,
@@ -3644,7 +3443,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           "numProbedFiles" -> probeFiles.size.toLong) ++ idMetrics,
         collectStats(w.files,
           rewriteStampZone(touched, base, sessionValues = true)),
-        cdcFiles = Some(cdc), newPartValues = w.partValues,
+        cdcFiles = Some(w.cdc), newPartValues = w.partValues,
         idHwBefore = if (identityColumn.isDefined) idHwBefore else -2L,
         newColumnMap = if (freshCm.isEmpty) None else Some(cm)))
     } finally idCleanup()
@@ -3703,8 +3502,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         totalOutFiles.toDouble * sizes(z) / total).toInt)
       val data = readFilesDvAware(fs, schemaAt(base), dvAt(base),
         columnMapAt(base)).coalesce(n)
-      (z, writeData(data, partitionColumnsAt(base), columnMapAt(base),
-        bucketSpecAt(base)))
+      (z, writeData(data, base))
     }
     val files = written.flatMap(_._2.files)
     val pv = written.flatMap(_._2.partValues).toMap
@@ -3752,7 +3550,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           stats, dvOut = (_, _) => Some(Nil), newPartValues = pv)
       case None =>
         val data = snapshotAt(base).coalesce(numFiles)
-        val w = writeData(data)
+        val w = writeData(data, base)
         // the rewrite read the snapshot DV-aware, so the DVs are
         // applied (purged) by compaction — clear them. Reads only
         // what it rewrites: concurrent appends land via conflict
@@ -3809,7 +3607,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       case None =>
         val data = readFilesDvAware(touched, schemaAt(base), dvAt(base),
           columnMapAt(base)).coalesce(n)
-        val w = writeData(data)
+        val w = writeData(data, base)
         // rewritten files absorbed their tombstones; DV files that
         // now mask only retired paths drop, re-opening DV-gated
         // readers. Reads only what it rewrites — disjoint
@@ -3867,7 +3665,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val data = snapshotAt(base)
       .repartitionByRange(numFiles, keys.map(col): _*)
       .sortWithinPartitions(keys.map(col): _*)
-    val w = writeData(data)
+    val w = writeData(data, base)
     commitResolved("CLUSTER", base, filesAt(base).toSet, w.files,
       None, readsTable = false, schemaAt(base),
       // requestedFiles feeds the next call's under-target settle
@@ -3892,7 +3690,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   def clusterByZOrder(numFiles: Int, keys: String*): Long = {
     require(keys.nonEmpty, "clusterByZOrder needs at least one key")
     val base = latestVersion
-    val w = writeData(mortonCluster(snapshotAt(base), numFiles, keys))
+    val w = writeData(mortonCluster(snapshotAt(base), numFiles, keys), base)
     commitResolved("ZORDER", base, filesAt(base).toSet, w.files,
       None, readsTable = false, schemaAt(base),
       Map("numRemovedFiles" -> filesAt(base).size.toLong),
@@ -3918,7 +3716,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (touched.size < 2) return base
     val data = readFilesDvAware(touched, schemaAt(base), dvAt(base),
       columnMapAt(base))
-    val w = writeData(mortonCluster(data, numFiles, keys))
+    val w = writeData(mortonCluster(data, numFiles, keys), base)
     commitResolved("ZORDER", base, touched.toSet, w.files,
       None, readsTable = false, schemaAt(base),
       Map("numRewrittenFiles" -> touched.size.toLong),
@@ -4421,18 +4219,21 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         .withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v))
     }
-    // a persisted change set keeps its own _change_type column; pad
-    // to outSchema and stamp the version like the computed branches
+    // a persisted change set keeps its own _change_type column; CDC
+    // files store PHYSICAL names like data files, so they read through
+    // the same translation. Pad to outSchema and stamp the version
+    // like the computed branches
     def fromCdc(files: Seq[String], schemaV: StructType, v: Long,
         cmV: Map[String, String]): DataFrame = {
       val cdcSchema = StructType(schemaV.fields :+
         org.apache.spark.sql.types.StructField("_change_type",
           org.apache.spark.sql.types.StringType, nullable = false))
-      val df = spark.read.schema(cdcSchema).parquet(files.map(abs): _*)
-      val present = df.schema.fieldNames.toSet
+      val df = spark.read.schema(physicalSchema(cdcSchema, cmV))
+        .parquet(files.map(abs): _*)
+      val present = cdcSchema.fieldNames.toSet
       df.select((outSchema.fields.map { f =>
           val vn = vNameFor(f, cmV)
-          if (present.contains(vn)) col(s"`$vn`").as(f.name)
+          if (present.contains(vn)) col(s"`${physName(cmV, vn)}`").as(f.name)
           else lit(null).cast(f.dataType).as(f.name)
         } :+ col("_change_type")).toIndexedSeq: _*)
         .withColumn("_commit_version", lit(v))
@@ -4688,6 +4489,30 @@ object GraftTable {
     */
   private[tables] val unstampedTz = "__unstamped__"
 
+  /** Names the DML and change-feed paths add to frames that carry a
+    * table's schema: the staging tag and partition copies, UPDATE's
+    * hit marker and pre-images, MERGE's action index, row addresses,
+    * the Z-order key and the feed's change columns. Those paths would
+    * overwrite or drop a user column of such a name, so no table may
+    * hold one: CREATE, CONVERT, OVERWRITE, RENAME COLUMN and schema
+    * evolution refuse them (case-insensitively, like Spark's column
+    * resolution).
+    */
+  private val reservedNames = Set("_change_type", "_commit_version",
+    "__tag", "__hit", "__action", "__fp", "__pos", "__file", "__z")
+  private val reservedPrefixes = Seq("__gp_", "__pre_")
+
+  private[tables] def requireUnreserved(names: Seq[String]): Unit = {
+    val bad = names.filter { n =>
+      val l = n.toLowerCase(java.util.Locale.ROOT)
+      reservedNames(l) || reservedPrefixes.exists(l.startsWith)
+    }
+    require(bad.isEmpty, s"column name(s) ${bad.mkString(", ")} are " +
+      "reserved for Graft's internal columns " +
+      s"(${reservedNames.toSeq.sorted.mkString(", ")}, and names starting " +
+      s"with ${reservedPrefixes.mkString(" or ")})")
+  }
+
   /** Undo Hive/Spark partition-path escaping (`%2F` etc) — the exact
     * inverse of the `escapePathName` applied by the parquet writer's
     * dynamic-partition layout.
@@ -4870,6 +4695,7 @@ object GraftTable {
         (assigned, Some(n - 1L), cleanup)
     }
     try {
+      requireUnreserved(seeded.schema.fieldNames.toSeq)
       val missing = (partitionBy ++ bucketBy)
         .filterNot(seeded.schema.fieldNames.contains)
       require(missing.isEmpty,
@@ -4962,6 +4788,7 @@ object GraftTable {
         s"unrecognized directory layout: ${stray.head} is nested but " +
           "not under k=v partition directories")
       val schema = spark.read.parquet(path).schema
+      requireUnreserved(schema.fieldNames.toSeq)
       Files.createDirectories(t.logDir)
       t.commit("CONVERT", -1L, parts, schema,
         Map("numAddedFiles" -> parts.size.toLong), t.collectStats(parts))
@@ -4983,6 +4810,7 @@ object GraftTable {
       // partition-column TYPES inferred from the path values
       // (appended after the data columns, Delta/Spark convention)
       val schema = spark.read.parquet(path).schema
+      requireUnreserved(schema.fieldNames.toSeq)
       require(pcols.forall(schema.fieldNames.contains),
         s"partition discovery did not surface ${pcols.mkString(",")}")
       val pv = parts.zip(segs).map { case (f, s) => f -> s.toMap }.toMap

@@ -298,8 +298,8 @@ class PartitionedTableSpec extends SparkSpec {
     spark.sparkContext.addSparkListener(listener)
     try {
       val dist = t.vacuumDryRun(1).select("path").as[String].collect().toSet
-      // listener events are async — give the bus a beat to drain
-      Thread.sleep(500)
+      // listener events are async — drain the bus before counting
+      org.apache.spark.ListenerBusDrain(spark.sparkContext)
       assert(dist === serial,
         s"distributed lost ${(serial -- dist).size}, invented ${(dist -- serial).size}")
       // the dry-run frame itself is a local Seq — the only job is the
