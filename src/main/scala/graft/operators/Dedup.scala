@@ -895,9 +895,10 @@ object Dedup {
     * builds sidecars for declared columns), so the band probe's
     * per-file pruning survives compaction; a pre-bloom legacy index
     * gets the declaration + a backfill here. Both are ordinary
-    * GraftTable commits: the idempotency watermarks ride commit
-    * metrics and survive, and a concurrent batch conflicts safely
-    * instead of losing rows.
+    * GraftTable commits: every commit carries the idempotency
+    * watermarks forward in its protocol state, so they survive the
+    * rewrite, and a concurrent batch conflicts safely instead of
+    * losing rows.
     *
     * `clustersPath`/`curatedPath` make this the ONE nightly front
     * door (the [[forgetEverywhere]] lesson applied to maintenance):

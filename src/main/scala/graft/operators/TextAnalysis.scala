@@ -636,35 +636,25 @@ object TextAnalysis {
     // from batch_id < 0 state (= 0), and appendIfNew under its OWN
     // namespace would land overlapping token ranges — the silent
     // corruption the monotone guard exists to refuse.
-    // a LEGACY-ORIGIN state table (created before the pipeline
-    // column, or still carrying null-pipeline rows from that era) is
-    // ADOPTED by the first pipeline that touches it: its null rows
-    // are ownership wildcards and the next state append backfills the
-    // column (evolve) with the adopter's id — but the exactly-once
-    // watermark namespace stays the LEGACY one forever, because the
-    // pre-adoption batches landed under it and a replayed old id
-    // checked against a fresh namespace would double-land its rows
-    val legacyOrigin = hasState && {
-      val st = GraftTable.load(spark, statePath).snapshot()
-      !st.columns.contains("pipeline") ||
-        st.where(col("pipeline").isNull).limit(1).count() > 0L
-    }
     if (hasState) {
       val st = GraftTable.load(spark, statePath).snapshot()
-      val owners =
-        (if (st.columns.contains("pipeline"))
-           st.where(col("pipeline").isNotNull).select(col("pipeline"))
-         else st.limit(0).select(lit("").as("pipeline")))
-          .distinct().collect().map(_.getString(0))
+      // a state table without the owner column predates pipeline
+      // namespaces; its batches' watermarks are not in any namespace
+      // this export reads, so continuing it could re-land them
+      require(st.columns.contains("pipeline"),
+        s"exportShardsIngest: the state table at $statePath has no " +
+          "'pipeline' column (written by an older Graft release); " +
+          "recreate the export")
+      val owners = st.where(col("pipeline").isNotNull)
+        .select(col("pipeline")).distinct().collect().map(_.getString(0))
       require(owners.isEmpty || owners.sameElements(Array(pipelineId)),
         s"exportShardsIngest: export path $exportPath is owned by " +
           s"pipeline '${owners.mkString(",")}' — a second id sequence " +
           "('" + pipelineId + "') must export to its own path " +
           "(colliding batch ids would silently overlap token ranges)")
     }
-    val nsId = if (legacyOrigin) "" else pipelineId
-    val (offset0, maxDoc0, isReplay) =
-      if (!hasState) (0L, -1L, false) else {
+    val (offset0, maxDoc0) =
+      if (!hasState) (0L, -1L) else {
       val r = GraftTable.load(spark, statePath).snapshot()
         .agg(
           coalesce(max(when(col("batch_id") < batchId,
@@ -686,7 +676,7 @@ object TextAnalysis {
         s"exportShardsIngest: batch $batchId is new but not above the " +
           s"max landed batch ${r.getLong(2)} — out-of-order NEW " +
           "batches would read a stale offset and overlap token ranges")
-      (r.getLong(0), r.getLong(1), isReplay)
+      (r.getLong(0), r.getLong(1))
     }
     // bounds read the counts frame when supplied (slim, usually
     // persisted by the caller) — same doc set as the batch by the
@@ -714,45 +704,20 @@ object TextAnalysis {
       // fail-safe order (state-first would double-advance the offset)
       val asgT = GraftTable.createIfAbsent(spark, asgPath,
         assigned.limit(0))
-      // MIXED-ERA adoption guard: a release that appended under a
-      // SUFFIXED namespace while the state table was still
-      // legacy-shaped (3-column) leaves batches whose watermark lives
-      // at appId + <someId> even though legacyOrigin forces nsId =
-      // ''. A replay of such a batch passes isReplay (the state row
-      // exists) but the '' watermark has never seen it — appending
-      // blind would re-land its token ranges. The state row's very
-      // EXISTENCE proves the batch fully landed (state commits
-      // SECOND), so on a legacy-origin table any replayed id skips
-      // both appends regardless of which namespace carried it — this
-      // also covers a batch landed by a DIFFERENT pre-upgrade
-      // pipeline id, which no namespace probe could name. (Residual:
-      // a pre-upgrade crash between the two commits replayed by a
-      // DIFFERENT id has no state row and no readable namespace —
-      // that recovery keeps needing the original pipeline id.)
-      def suffixCovered(t: GraftTable, appIdBase: String): Boolean =
-        legacyOrigin && (isReplay ||
-          (pipelineId.nonEmpty &&
-            t.lastStreamBatchId(appIdBase + pipelineId) >= batchId))
       // per-pipeline watermark namespaces (the sigs/shingles lesson):
       // two id sequences sharing one export path must not mistake
       // each other's batch 0 for a replay
-      if (!suffixCovered(asgT, exportAssignAppId))
-        asgT.appendIfNew(assigned, batchId,
-          appId = exportAssignAppId + nsId): Unit
+      asgT.appendIfNew(assigned, batchId,
+        appId = exportAssignAppId + pipelineId): Unit
       import spark.implicits._
-      // state rows ALWAYS carry the owning pipeline — an adopted
-      // legacy table backfills the column on this append (schema
-      // evolves additively; its pre-adoption rows read null and stay
-      // ownership wildcards for THIS owner only, since the non-null
-      // owner set now refuses everyone else)
+      // state rows ALWAYS carry the owning pipeline
       val stateRow = Seq((batchId, endOffset, bounds.getLong(1),
           pipelineId))
         .toDF("batch_id", "end_offset", "max_doc", "pipeline")
       val stT = GraftTable.createIfAbsent(spark, statePath,
         stateRow.limit(0))
-      if (!suffixCovered(stT, exportStateAppId))
-        stT.appendIfNew(stateRow, batchId,
-          appId = exportStateAppId + nsId, evolve = true): Unit
+      stT.appendIfNew(stateRow, batchId,
+        appId = exportStateAppId + pipelineId): Unit
       // return the TABLE-BACKED batch slice — the commits already
       // landed distributed, so the result never rides a driver
       // collect (a production-sized batch must not materialize on

@@ -372,31 +372,13 @@ object Streams {
   /** The curation pipeline's identity for a checkpoint: the CANONICAL
     * path (respelling the same location — relative, ./-segmented, or
     * symlinked — must not change the ownership identity or any
-    * watermark namespace — the exportStream lesson), EXCEPT when the
-    * index already carries admission watermarks under the
-    * pre-canonicalization RAW spelling — that pipeline keeps its raw
-    * identity (switching it would be exactly the lock-out the
-    * canonicalization prevents). The legacy probe checks BOTH halves
-    * of the fail-safe append order (shingles land first, sigs
-    * second), so a pipeline that crashed between the two is still
-    * recognized. Returns (pipelineId, curated-append appId) — the
-    * appId is the id without the ':' prefix, the historical spelling.
+    * watermark namespace — the exportStream lesson). Returns
+    * (pipelineId, curated-append appId) — the appId is the id without
+    * the ':' prefix.
     */
-  private[graft] def curationPipelineId(spark: SparkSession,
-      checkpoint: String, indexPath: String): (String, String) = {
+  private[graft] def curationPipelineId(checkpoint: String): (String, String) = {
     val canonical = canonicalPath(checkpoint)
-    def rawWatermark(sub: String, appIdBase: String): Boolean = {
-      val p = java.nio.file.Paths.get(indexPath, sub)
-      java.nio.file.Files.exists(p.resolve("_graft_log")) &&
-        graft.tables.GraftTable.load(spark, p.toString)
-          .lastStreamBatchId(appIdBase + ":" + checkpoint) >= 0L
-    }
-    val legacy = checkpoint != canonical &&
-      (rawWatermark("sigs", graft.operators.Dedup.incrSigsAppId) ||
-        rawWatermark("shingles",
-          graft.operators.Dedup.incrShinglesAppId))
-    val base = if (legacy) checkpoint else canonical
-    (":" + base, base)
+    (":" + canonical, canonical)
   }
 
   def curationStream(spark: SparkSession, rawDir: String,
@@ -412,7 +394,7 @@ object Streams {
     val cp = java.nio.file.Paths.get(checkpoint)
     java.nio.file.Files.createDirectories(cp)
     val (pipelineId, curatedAppId) =
-      curationPipelineId(spark, checkpoint, indexPath)
+      curationPipelineId(checkpoint)
     val q = spark.readStream.schema(schema)
       // the explicit option (even at the take-everything default)
       // pins the pacing so a session default or future source change
@@ -557,26 +539,8 @@ object Streams {
     // (relative vs absolute, trailing slash, ./ segments) must not
     // change the ownership identity or the appendIfNew watermark
     // namespace — that would lock a restarted export out of its own
-    // state table. MIGRATION: an export whose state was landed under
-    // the pre-canonicalization RAW spelling (":" + the verbatim
-    // checkpoint string) keeps that identity — switching it to the
-    // canonical id would be exactly the lock-out this fix prevents.
-    val pipelineId = {
-      val canonical = ":" + canonicalPath(checkpoint)
-      val raw = ":" + checkpoint
-      val statePath = java.nio.file.Paths.get(exportPath, "state")
-      if (raw != canonical &&
-          java.nio.file.Files.exists(statePath.resolve("_graft_log"))) {
-        val st = graft.tables.GraftTable
-          .load(spark, statePath.toString).snapshot()
-        val owners =
-          if (st.columns.contains("pipeline"))
-            st.where(col("pipeline").isNotNull).select(col("pipeline"))
-              .distinct().collect().map(_.getString(0)).toSeq
-          else Seq.empty[String]
-        if (owners == Seq(raw)) raw else canonical
-      } else canonical
-    }
+    // state table
+    val pipelineId = ":" + canonicalPath(checkpoint)
     // a continuous pipeline starting BEFORE the first file lands
     // passes the schema explicitly — batch inference over an empty
     // raw dir has nothing to infer from (and re-lists the dir on
@@ -996,15 +960,8 @@ object Streams {
     // symlinked) resolves to the same Spark stream checkpoint and
     // batch-id sequence, so a raw-string appId would split the
     // exactly-once namespace and re-land a replayed batch under the
-    // new spelling (the exportStream lesson). EXCEPT when the sink
-    // already carries a watermark under the raw pre-canonicalization
-    // spelling: that pipeline keeps its raw identity — switching
-    // would orphan its watermark, which is the same bug.
-    val canonicalCp = canonicalPath(checkpoint)
-    val appId =
-      if (checkpoint != canonicalCp &&
-          sink.lastStreamBatchId(checkpoint) >= 0L) checkpoint
-      else canonicalCp
+    // new spelling (the exportStream lesson)
+    val appId = canonicalPath(checkpoint)
     val q = in.select(projection: _*).writeStream
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .option("checkpointLocation",

@@ -161,9 +161,9 @@ private[tables] object BloomIndex {
     }
   }
 
-  /** Atomic sidecar publish (same tmp + ATOMIC_MOVE pattern as the
-    * retention rollup writer): a racing reader can never observe a
-    * truncated filter, and a crash mid-write leaves only a .tmp.
+  /** Atomic sidecar publish (tmp file + ATOMIC_MOVE): a racing
+    * reader can never observe a truncated filter, and a crash
+    * mid-write leaves only a .tmp.
     */
   private def writeSidecar(fileAbs: String, mBits: Int,
       cols: scala.collection.Map[String, Array[Long]]): Unit = {

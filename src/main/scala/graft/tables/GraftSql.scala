@@ -1491,7 +1491,8 @@ object GraftSql {
       StructField("timestamp", TimestampType),
       StructField("operation", StringType),
       StructField("num_files", LongType, nullable = false),
-      StructField("num_rows", LongType, nullable = false)))
+      StructField("operation_metrics",
+        MapType(StringType, LongType, valueContainsNull = false))))
   }
 
   private[graft] def utilityTargetIsGraft(spark: SparkSession,

@@ -72,13 +72,21 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         "earlier commits may have been removed by log retention)"
     })
     implicit val fmt: Formats = DefaultFormats
-    JsonMethods.parse(Files.readString(commitFile(v))).extract[Commit]
+    val c = JsonMethods.parse(Files.readString(commitFile(v))).extract[Commit]
+    if (!c.format.contains(CommitFormat))
+      throw new IllegalStateException(
+        s"table at $root: version $v has commit format " +
+          s"${c.format.fold("none (an older Graft release)")(_.toString)}, " +
+          s"this build reads format $CommitFormat only; recreate the table " +
+          "(its protocol state — sink watermarks, COPY INTO markers, " +
+          "identity high water — is not readable from this log)")
+    c
   }
 
   /** Read commit `v` RESOLVED to full state. On-disk commits come in
     * two spellings (see [[encodeDelta]]): FULL (the complete file
-    * list + stats — every pre-checkpointing log, CREATE, wholesale
-    * rewrites, and every Nth commit, which doubles as the checkpoint)
+    * list, stats and protocol state — CREATE, wholesale rewrites, and
+    * every Nth commit, which doubles as the checkpoint)
     * and DELTA (`delta=true`: only the commit's adds/removes). A
     * delta chain resolves by walking back to the nearest full commit
     * (≤ interval hops of SMALL files) and folding forward — snapshot
@@ -112,9 +120,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
 
   /** Reconstruct a delta commit's full state from its parent's:
     * files = parent − removes + adds; stats/partition values carry
-    * for surviving files and merge the adds' entries — exactly the
-    * carry rule [[commit]] applies at write time, so a resolved delta
-    * commit is indistinguishable from the full commit it encodes.
+    * for surviving files and merge the adds' entries; the protocol
+    * state folds the delta's changed entries into the parent's —
+    * exactly the carry rule [[commit]] applies at write time, so a
+    * resolved delta commit is indistinguishable from the full commit
+    * it encodes.
     */
   private def resolveDelta(raw: Commit, parent: Commit): Commit = {
     val removed = raw.removes.getOrElse(Nil).toSet
@@ -126,9 +136,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val pv = parent.partValues.getOrElse(Map.empty)
       .filter { case (f, _) => fileSet.contains(f) } ++
       raw.partValues.getOrElse(Map.empty)
+    val st = parent.carried.fold(raw.carried)
     raw.copy(files = files, removes = None, delta = None,
       stats = if (stats.isEmpty) None else Some(stats),
-      partValues = if (pv.isEmpty) None else Some(pv))
+      partValues = if (pv.isEmpty) None else Some(pv),
+      state = if (st == TableState.empty) None else Some(st))
   }
 
   /** Checkpoint cadence: every Nth commit is written FULL (the
@@ -150,7 +162,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * O(versions × files). Wholesale rewrites (overwrite, restore,
     * compact — where the delta IS the table) stay full commits, as
     * does every Nth version (the implicit checkpoint every reader
-    * chain terminates on). Read-compatible: old logs are all-full.
+    * chain terminates on).
     */
   private def encodeDelta(c: Commit): Commit = {
     if (c.version <= 0) return c
@@ -174,7 +186,10 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         .filter(_.nonEmpty),
       partValues = c.partValues
         .map(_.filter { case (f, _) => !parentSet.contains(f) })
-        .filter(_.nonEmpty))
+        .filter(_.nonEmpty),
+      // protocol state likewise: only the entries this commit changed
+      state = Some(c.carried.since(parent.carried))
+        .filter(_ != TableState.empty))
   }
 
   /** Atomic optimistic-concurrency commit: content goes to a temp
@@ -753,6 +768,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * the read-side anti-join keys on exact file paths and rewritten
     * files get fresh names); Some(list) sets it explicitly
     * (Some(Nil) clears, for ops that rewrite every file).
+    *
+    * `state`: this commit's protocol-state additions, folded into the
+    * base's carried state (watermarks by max, retired names by
+    * union); physical column names this commit removes from the
+    * schema join the retired set here, whatever the op. RESTORE
+    * therefore keeps the latest state, so no watermark goes down.
     */
   private def commit(op: String, base: Long, files: Seq[String],
       schema: StructType, metrics: Map[String, Long],
@@ -767,7 +788,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       newProperties: Map[String, String] = Map.empty,
       generatedOpt: Option[Map[String, String]] = None,
       identityOpt: Option[String] = None,
-      bucketByOpt: Option[(Seq[String], Int)] = None): Long = {
+      bucketByOpt: Option[(Seq[String], Int)] = None,
+      state: TableState = TableState.empty): Long = {
     val v = base + 1
     // Set membership, not List.contains — the carry filters run per
     // stats/partition-values entry, and O(files²) per commit bites at
@@ -831,15 +853,27 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // the clock catches up.
     val tsOut = math.max(System.currentTimeMillis(),
       if (v == 0) Long.MinValue else readCommit(base).timestampMs + 1)
+    val schemaJson = schema.json
+    val stateOut = if (v == 0) state else {
+      val p = readCommit(base)
+      val pcm = p.columnMap.getOrElse(Map.empty)
+      val dropped =
+        if (p.schemaJson == schemaJson && pcm == cmOut) Set.empty[String]
+        else physicalSchema(schemaAt(base), pcm).fieldNames.toSet --
+          physicalSchema(schema, cmOut).fieldNames
+      p.carried.fold(state).fold(TableState.of(Map.empty, dropped))
+    }
     writeCommit(Commit(v, tsOut, op, files.toList,
-      schema.json, metrics, Some(carried ++ newStats),
+      schemaJson, metrics, Some(carried ++ newStats),
       Some(constraintsOut),
       cdcFiles.map(_.toList),
       if (dvList.isEmpty) None else Some(dvList),
       pb, if (pvAll.isEmpty) None else Some(pvAll),
       if (cmOut.isEmpty) None else Some(cmOut),
       if (propsOut.isEmpty) None else Some(propsOut),
-      genOut, idOut, bkOut, nbOut))
+      genOut, idOut, bkOut, nbOut,
+      state = Some(stateOut).filter(_ != TableState.empty),
+      format = Some(CommitFormat)))
     v
   }
 
@@ -915,12 +949,23 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     }
   }
 
-  private def identityKey = "identity:highWater"
-
-  /** Highest identity value ever committed (rides commit metrics, so
-    * it survives restarts and concurrent writers take the max).
+  /** Highest identity value ever committed (a carried watermark, so
+    * it survives restarts and log retention, and concurrent writers
+    * take the max).
     */
-  def identityHighWater: Long = maxMetric(identityKey).getOrElse(-1L)
+  def identityHighWater: Long = watermark(identityKey).getOrElse(-1L)
+
+  /** The latest commit's carried protocol state. */
+  private def latestState: TableState = {
+    val v = latestVersion
+    if (v < 0) TableState.empty else readCommit(v).carried
+  }
+
+  /** Carried watermark `key` (sink batch ids, MV source versions):
+    * one read of the latest commit, however long the log.
+    */
+  private[tables] def watermark(key: String): Option[Long] =
+    latestState.marks.get(key)
 
   // ---- column mapping (rename/drop without rewrite) --------------------
 
@@ -948,36 +993,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
 
   /** Every physical column name any commit ≤ `v` ever used — the
     * collision set for fresh-name allocation (a re-added logical name
-    * must NOT resurrect a dropped physical column's bytes). Scans the
-    * LIVE commit files only — commits removed by log retention have
-    * their physical names rolled into the metrics-rollup sidecar
-    * (`phys:` keys) before deletion, so the set survives cleanup and
-    * the scan stays O(retained versions), not O(table lifetime).
-    * Returns None when the set is UNKNOWABLE: a rollup written by a
-    * release that predates name-rolling (no `physrolled` marker)
-    * deleted commits whose names are gone — the caller must then
-    * allocate unconditionally-fresh physical names rather than trust
-    * an under-covering set (a missed collision silently resurrects
-    * dropped bytes; over-fresh naming is always sound).
+    * must NOT resurrect a dropped physical column's bytes): the names
+    * of `v`'s schema plus the retired names its state carries.
     */
-  private def usedPhysicalNames(v: Long): Option[Set[String]] = {
-    val rollup = readMetricsRollup()
-    if (Files.exists(rollupFile) && !rollup.contains(physRolledKey))
-      return None
-    Some((listVersions().filter(_ <= v).flatMap { vv =>
-      val c = readCommit(vv)
-      val s = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
-        .asInstanceOf[StructType]
-      val cm = c.columnMap.getOrElse(Map.empty)
-      s.fieldNames.map(physName(cm, _))
-    } ++ rollup.keys.collect {
-      case k if k.startsWith(physKeyPrefix) =>
-        k.stripPrefix(physKeyPrefix)
-    }).toSet)
-  }
-
-  private val physKeyPrefix = "phys:"
-  private val physRolledKey = "physrolled"
+  private def usedPhysicalNames(v: Long): Set[String] =
+    physicalSchema(schemaAt(v), columnMapAt(v)).fieldNames.toSet ++
+      readCommit(v).carried.retiredNames
 
   private def requireUnconstrained(base: Long, colName: String,
       op: String): Unit = {
@@ -1405,7 +1426,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * contiguous ranges, so the high water advances by exactly the
     * row count — no 2^33 monotonically_increasing_id jumps eating
     * the long's exactness headroom. Returns the frame plus the
-    * commit-metric updates (the new identity high water).
+    * watermark additions (the new identity high water).
     */
   private def injectWriteColumns(df: DataFrame)
       : (DataFrame, Map[String, Long], () => Unit) = {
@@ -1754,8 +1775,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     (df, keep.size)
   }
 
-  /** DESCRIBE HISTORY analog: one row per commit. */
-  /** Full history, oldest first (the established unlimited order). */
+  /** DESCRIBE HISTORY analog: one row per commit, newest first. */
   def history(): DataFrame = history(Int.MaxValue)
 
   /** DESCRIBE HISTORY [LIMIT n]: the LATEST `limit` commits, ALWAYS
@@ -1763,14 +1783,17 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * spellings — a generous limit must not flip row 0 from the latest
     * commit to CREATE) — and only those commits are read/resolved, so
     * inspecting the recent history of a 10⁵-version log stays
-    * O(limit), not O(versions).
+    * O(limit), not O(versions). `operation_metrics` is the commit's
+    * own metrics map (files added, removed, rewritten or probed, ...);
+    * protocol state is not history.
     */
   def history(limit: Int): DataFrame = {
     import spark.implicits._
     listVersions().takeRight(limit).reverse.map(readCommit).map { c =>
       (c.version, new java.sql.Timestamp(c.timestampMs), c.operation,
-        c.files.size.toLong, c.metrics.getOrElse("numOutputRows", -1L))
-    }.toDF("version", "timestamp", "operation", "num_files", "num_rows")
+        c.files.size.toLong, c.metrics)
+    }.toDF("version", "timestamp", "operation", "num_files",
+      "operation_metrics")
   }
 
   private def abs(rel: String): String = root.resolve(rel).toString
@@ -1932,16 +1955,10 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val addedCols = schema.fieldNames
       .filterNot(n => base >= 0 && schemaAt(base).fieldNames.contains(n))
     if (addedCols.isEmpty || base < 0) Map.empty
-    else usedPhysicalNames(base) match {
-      case Some(used) =>
-        addedCols.filter(used.contains)
-          .map(n => n -> s"${n}__c${base + 1}").toMap
-      case None =>
-        // the collision set was lost to a pre-name-rolling log
-        // cleanup: every added column gets a fresh physical name —
-        // cosmetically uglier files, but a resurrection can never
-        // slip through
-        addedCols.map(n => n -> s"${n}__c${base + 1}").toMap
+    else {
+      val used = usedPhysicalNames(base)
+      addedCols.filter(used.contains)
+        .map(n => n -> s"${n}__c${base + 1}").toMap
     }
   }
 
@@ -1958,14 +1975,16 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   def append(df: DataFrame, evolve: Boolean = false): Long =
     appendInternal(df, evolve, Map.empty)
 
+  /** Append carrying watermark additions `marks` (sink txn ids, COPY
+    * INTO markers) in the commit's protocol state. */
   private def appendInternal(df: DataFrame, evolve: Boolean,
-      extraMetrics: Map[String, Long]): Long = {
+      marks: Map[String, Long]): Long = {
     val base = latestVersion
     // identity baseline BEFORE assignment: the conflict-retry loop
     // must detect a racer advancing it (our ids were allocated from
     // this value and would collide with theirs)
     val idHwBefore = if (identityColumn.isDefined) identityHighWater else -2L
-    val (dfIn, idMetrics, idCleanup) = injectWriteColumns(df)
+    val (dfIn, idMarks, idCleanup) = injectWriteColumns(df)
     try {
     enforceConstraints(dfIn)
     val schema = checkSchema(dfIn, evolve)
@@ -1988,26 +2007,24 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       try {
         return maybeAutoCompact(
           commit("APPEND", b, filesAt(b) ++ added, schema,
-            Map("numAddedFiles" -> added.size.toLong) ++ extraMetrics ++
-              idMetrics, stats,
+            Map("numAddedFiles" -> added.size.toLong), stats,
             newPartValues = w.partValues,
-            newColumnMap = if (fresh.isEmpty) None else Some(cm)))
+            newColumnMap = if (fresh.isEmpty) None else Some(cm),
+            state = TableState.of(marks ++ idMarks)))
       } catch {
         case e: CommitConflictException =>
           attempts += 1
           // exactly-once sink race: if the SAME (appId, batchId)
           // landed via the racing commit, this append is a no-op
-          val superseded = extraMetrics.exists { case (k, v) =>
-            k.startsWith("txn:") && listVersions()
-              .flatMap(vv => readCommit(vv).metrics.get(k))
-              .maxOption.exists(_ >= v)
+          val landed = latestState.marks
+          val superseded = marks.exists { case (k, v) =>
+            k.startsWith("txn:") && landed.get(k).exists(_ >= v)
           }
           if (superseded) return latestVersion
           // concurrent COPY INTO race: a racer that landed ANY of the
           // same source files makes blind re-resolution a double load
-          if (extraMetrics.keys.exists(k => k.startsWith("copy:") &&
-              listVersions().filter(_ > base)
-                .exists(v => readCommit(v).metrics.contains(k))))
+          if (marks.keys.exists(k => k.startsWith("copy:") &&
+              landed.contains(k)))
             throw e
           // a racer that EVOLVED the schema invalidates our aligned
           // projection, and one that ADDED a constraint invalidates
@@ -2024,7 +2041,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           // already-written ids (allocated from idHwBefore) collide
           // with theirs — blind-append re-resolution would commit
           // duplicate identity values
-          if (idMetrics.nonEmpty && identityHighWater != idHwBefore)
+          if (idMarks.nonEmpty && identityHighWater != idHwBefore)
             throw e
           if (readCommit(latestVersion).constraints.getOrElse(Map.empty) !=
               readCommit(base).constraints.getOrElse(Map.empty)) throw e
@@ -2044,15 +2061,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * each other's batches.
     */
   def lastStreamBatchId(appId: String = "default"): Long =
-    maxMetric(txnKey(appId)).getOrElse(-1L)
-
-  /** Highest value ever committed under metric `key` — the generic
-    * watermark read (streaming batch ids, materialized-view source
-    * versions) that survives restarts with the log.
-    */
-  def maxMetric(key: String): Option[Long] =
-    (listVersions().flatMap(v => readCommit(v).metrics.get(key)) ++
-      readMetricsRollup().get(key)).maxOption
+    watermark(txnKey(appId)).getOrElse(-1L)
 
   private def txnKey(appId: String): String = s"txn:$appId"
 
@@ -2060,8 +2069,10 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * batch id) — the exactly-once streaming-sink primitive (Delta's
     * txnAppId/txnVersion pattern): a replayed foreachBatch epoch
     * (restart after a sink-side failure, speculative re-run) is a
-    * NO-OP instead of a duplicate append. The pair rides in the
-    * commit metrics, so the watermark survives restarts with the log.
+    * NO-OP instead of a duplicate append. The pair is a watermark in
+    * the commit's carried protocol state, so every later commit holds
+    * it: it survives restarts, log retention and RESTORE, and reading
+    * it is one read of the latest commit.
     * `appId` identifies the writing query (use its checkpoint path or
     * query id) — distinct apps never shadow one another's watermarks.
     */
@@ -2075,9 +2086,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * FILE-LEVEL load of a directory's parquet files into the table —
     * each source file lands exactly once across any number of
     * invocations, restarts and partial failures. The ledger is a
-    * per-file marker in the commit metrics (`copy:<md5(path)>`),
-    * which survives restarts with the log and survives LOG RETENTION
-    * through the max-metric rollup sidecar. Re-running after new
+    * per-file marker (`copy:<md5(path)>`) in the carried protocol
+    * state, which every later commit holds, so it survives restarts,
+    * log retention and RESTORE. Re-running after new
     * files arrive loads only the new files; re-running unchanged is a
     * no-op without a commit. A concurrent COPY INTO that landed any
     * of the same source files fails the race instead of double
@@ -2089,9 +2100,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       .filter(_.getFileName.toString.endsWith(".parquet"))
       .map(_.toAbsolutePath.toString).sorted
     require(all.nonEmpty, s"COPY INTO: no parquet files under $dir")
-    val loaded: Set[String] =
-      (listVersions().flatMap(v => readCommit(v).metrics.keys) ++
-        readMetricsRollup().keys).filter(_.startsWith("copy:")).toSet
+    val loaded = latestState.marks
     val fresh = all.filterNot(f => loaded.contains(GraftTable.copyKey(f)))
     if (fresh.isEmpty) return latestVersion
     val df = spark.read.parquet(fresh: _*)
@@ -2099,13 +2108,16 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       fresh.map(f => GraftTable.copyKey(f) -> 1L).toMap)
   }
 
+  /** Replace the table's contents with `df`; `marks` are watermark
+    * additions carried in the commit's protocol state (the MV refresh
+    * records its source and dimension versions here). */
   def overwrite(df: DataFrame,
-      extraMetrics: Map[String, Long] = Map.empty): Long = {
+      marks: Map[String, Long] = Map.empty): Long = {
     val base = latestVersion
     // identity/generated semantics hold on EVERY write path, not just
     // append: supplied identity is refused, absent one is assigned
     // (continuing the high water), generated columns compute/validate
-    val (dfIn, idMetrics, idCleanup) = injectWriteColumns(df)
+    val (dfIn, idMarks, idCleanup) = injectWriteColumns(df)
     try {
       GraftTable.requireUnreserved(dfIn.schema.fieldNames.toSeq)
       enforceConstraints(dfIn)
@@ -2115,10 +2127,10 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       val w = writeData(dfIn, partitionColumnsAt(base), Map.empty,
         bucketSpecAt(base))
       commit("OVERWRITE", base, w.files, dfIn.schema,
-        Map("numAddedFiles" -> w.files.size.toLong) ++ extraMetrics ++
-          idMetrics,
+        Map("numAddedFiles" -> w.files.size.toLong),
         collectStats(w.files), dv = Some(Nil), newPartValues = w.partValues,
-        newColumnMap = Some(Map.empty))
+        newColumnMap = Some(Map.empty),
+        state = TableState.of(marks ++ idMarks))
     } finally idCleanup()
   }
 
@@ -2139,7 +2151,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     require(pcols.nonEmpty,
       "overwritePartitions requires a table created with partitionBy")
     val idHwBefore = if (identityColumn.isDefined) identityHighWater else -2L
-    val (dfIn, idMetrics, idCleanup) = injectWriteColumns(df)
+    val (dfIn, idMarks, idCleanup) = injectWriteColumns(df)
     try {
     enforceConstraints(dfIn)
     val schema = checkSchema(dfIn, evolve = false)
@@ -2175,9 +2187,10 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       replaced.toSet, w.files, Some(replacedCond), readsTable = false,
       schema,
       Map("numReplacedFiles" -> replaced.size.toLong,
-        "numAddedFiles" -> w.files.size.toLong) ++ idMetrics,
+        "numAddedFiles" -> w.files.size.toLong),
       collectStats(w.files), cdcFiles = Some(cdc),
-      newPartValues = w.partValues, idHwBefore = idHwBefore)
+      newPartValues = w.partValues, idHwBefore = idHwBefore,
+      marks = idMarks)
     } finally idCleanup()
   }
 
@@ -2191,7 +2204,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   def replaceWhere(cond: Column, df: DataFrame): Long = {
     val base = latestVersion
     val idHwBefore = if (identityColumn.isDefined) identityHighWater else -2L
-    val (dfIn, idMetrics, idCleanup) = injectWriteColumns(df)
+    val (dfIn, idMarks, idCleanup) = injectWriteColumns(df)
     try {
     enforceConstraints(dfIn)
     val schema = checkSchema(dfIn, evolve = false)
@@ -2226,12 +2239,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       touched.toSet, wSurv.files ++ wNew.files, Some(cond),
       readsTable = false, schema,
       Map("numRewrittenFiles" -> touched.size.toLong,
-        "numAddedFiles" -> wNew.files.size.toLong) ++ idMetrics,
+        "numAddedFiles" -> wNew.files.size.toLong),
       collectStats(wSurv.files ++ wNew.files,
         rewriteStampZone(touched, base, sessionValues = true)),
       cdcFiles = Some(wSurv.cdc ++ wNew.cdc),
       newPartValues = wSurv.partValues ++ wNew.partValues,
-      idHwBefore = idHwBefore)
+      idHwBefore = idHwBefore, marks = idMarks)
     } finally idCleanup()
   }
 
@@ -2495,8 +2508,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         bc.properties.getOrElse(Map.empty)) fail("table properties changed")
     if (dvAt(latest) != dvAt(base))
       fail("the deletion-vector set changed")
-    if (idHwBefore != -2L &&
-        maxMetric(identityKey).getOrElse(-1L) != idHwBefore)
+    if (idHwBefore != -2L && identityHighWater != idHwBefore)
       fail("a concurrent commit advanced the identity high water")
     val strict = isolationLevel.equalsIgnoreCase("Serializable")
     var v = base + 1
@@ -2558,7 +2570,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       dvOut: (Long, Seq[String]) => Option[Seq[String]] = null,
       conflictRemoves: Option[Set[String]] = None,
       idHwBefore: Long = -2L,
-      newColumnMap: Option[Map[String, String]] = None): Long = {
+      newColumnMap: Option[Map[String, String]] = None,
+      marks: Map[String, Long] = Map.empty): Long = {
     val dvFn: (Long, Seq[String]) => Option[Seq[String]] =
       if (dvOut != null) dvOut
       else (b, untouched) => Some(liveDvs(dvAt(b), untouched, filesAt(b)))
@@ -2569,7 +2582,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       try {
         return commit(op, b, untouched ++ adds, schema, metrics, newStats,
           cdcFiles = cdcFiles, dv = dvFn(b, untouched),
-          newPartValues = newPartValues, newColumnMap = newColumnMap)
+          newPartValues = newPartValues, newColumnMap = newColumnMap,
+          state = TableState.of(marks))
       } catch {
         case e: CommitConflictException =>
           attempts += 1
@@ -2590,7 +2604,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val touched = touchedFiles(cond)
     if (touched.isEmpty)
       return commitResolved("DELETE", base, Set.empty, Nil,
-        Some(cond), readsTable = false, schemaAt(base), Map(),
+        Some(cond), readsTable = false, schemaAt(base),
+        Map("numRewrittenFiles" -> 0L),
         cdcFiles = Some(Nil), dvOut = (_, _) => None)
     // DV-aware: rows already masked by deletion vectors must neither
     // survive into the rewrite nor re-appear in the CDC delete set
@@ -2815,7 +2830,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val touched = touchedFiles(cond)
     if (touched.isEmpty)
       return commitResolved("UPDATE", base, Set.empty, Nil,
-        Some(cond), readsTable = false, schemaAt(base), Map(),
+        Some(cond), readsTable = false, schemaAt(base),
+        Map("numRewrittenFiles" -> 0L),
         cdcFiles = Some(Nil), dvOut = (_, _) => None)
     val cur = readFilesDvAware(touched, schemaAt(base), dvAt(base),
       columnMapAt(base))
@@ -3350,7 +3366,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // advanced the high water conflicts on the version claim — two
     // merges can never land overlapping id blocks
     val idHwBefore = if (identityColumn.isDefined) identityHighWater else -2L
-    val (inserts, idMetrics, idCleanup) = (insertsRaw, identityColumn) match {
+    val (inserts, idMarks, idCleanup) = (insertsRaw, identityColumn) match {
       case (Some(ins), Some(idc)) =>
         val (assigned, n, cleanup) = assignDenseIds(ins, idc, idHwBefore)
         (Some(assigned.select(schema.fieldNames.map(col).toIndexedSeq: _*)),
@@ -3426,7 +3442,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           readsTable = readsTable || bySource.nonEmpty, schema,
           Map("numProbedFiles" -> probeFiles.size.toLong,
             "numAddedDvFiles" -> newDv.size.toLong,
-            "numAddedFiles" -> w.files.size.toLong) ++ idMetrics,
+            "numAddedFiles" -> w.files.size.toLong),
           collectStats(w.files,
             rewriteStampZone(maskedRel, base, sessionValues = true)),
           cdcFiles = Some(w.cdc),
@@ -3434,18 +3450,20 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           conflictRemoves = Some(maskedRel.toSet),
           newPartValues = w.partValues,
           idHwBefore = if (identityColumn.isDefined) idHwBefore else -2L,
-          newColumnMap = if (freshCm.isEmpty) None else Some(cm))
+          newColumnMap = if (freshCm.isEmpty) None else Some(cm),
+          marks = idMarks)
       else maybeAutoCompact(commitResolved("MERGE", base,
         touched.toSet, w.files,
         if (bySource.isEmpty) readCond else None,
         readsTable = readsTable || bySource.nonEmpty, schema,
         Map("numRewrittenFiles" -> touched.size.toLong,
-          "numProbedFiles" -> probeFiles.size.toLong) ++ idMetrics,
+          "numProbedFiles" -> probeFiles.size.toLong),
         collectStats(w.files,
           rewriteStampZone(touched, base, sessionValues = true)),
         cdcFiles = Some(w.cdc), newPartValues = w.partValues,
         idHwBefore = if (identityColumn.isDefined) idHwBefore else -2L,
-        newColumnMap = if (freshCm.isEmpty) None else Some(cm)))
+        newColumnMap = if (freshCm.isEmpty) None else Some(cm),
+        marks = idMarks))
     } finally idCleanup()
     } catch { case t: Throwable =>
       src.unpersist()
@@ -3759,7 +3777,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
 
   /** RESTORE analog (roll the table back to an old version): commits
     * a new version whose file list IS the old version's — history
-    * stays append-only, nothing is rewritten.
+    * stays append-only, nothing is rewritten. The protocol state is
+    * the LATEST one (like every commit, RESTORE carries its base's
+    * state forward), so sink watermarks, COPY INTO markers and the
+    * identity high water never go down; physical names the restored
+    * schema no longer holds join the retired set.
     */
   def restore(version: Long): Long = {
     val base = latestVersion
@@ -3837,31 +3859,16 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       .orElse(properties.get("graft.logRetention.versions").map(_.toInt))
       .getOrElse(1000)
 
-  private def rollupFile: Path = logDir.resolve("metrics-rollup.json")
-
-  /** Max-based metric watermarks rolled up from commits the log
-    * cleanup removed — identity high water, exactly-once sink txn
-    * ids, MV source versions. [[maxMetric]] folds this in, so
-    * watermarks never regress when their carrying commit ages out.
-    */
-  private def readMetricsRollup(): Map[String, Long] =
-    if (!Files.exists(rollupFile)) Map.empty
-    else {
-      implicit val fmt: Formats = DefaultFormats
-      JsonMethods.parse(Files.readString(rollupFile)).extract[Map[String, Long]]
-    }
-
   /** Remove commit/checkpoint files no read inside the trailing
     * `keepVersions` window can reach. The kept prefix anchors at the
     * newest FULL (checkpoint) commit at or below the cutoff, so every
-    * surviving version still resolves its delta chain; the removed
-    * commits' metric maxima are rolled into [[readMetricsRollup]]'s
-    * sidecar BEFORE deletion (a crash leaves an over-covering rollup,
-    * never a regressed watermark). Time travel below the anchor then
-    * fails with the version-unavailable error. O(interval) log files
-    * remain beyond the window however many versions the table has
-    * lived — a 10⁵-commit streaming table's `_graft_log` stops
-    * growing forever.
+    * surviving version still resolves its delta chain — and since a
+    * full commit stores the whole protocol state, nothing the removed
+    * commits recorded is lost: cleanup only deletes. Time travel below
+    * the anchor then fails with the version-unavailable error.
+    * O(interval) log files remain beyond the window however many
+    * versions the table has lived — a 10⁵-commit streaming table's
+    * `_graft_log` stops growing forever.
     */
   private def cleanupLog(keepVersions: Int): Long = {
     val versions = listVersions()
@@ -3870,45 +3877,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (cutoff <= versions.head) return 0L
     val anchor = versions.filter(_ <= cutoff).reverse
       .find(v => !parseCommit(v).delta.contains(true))
-    anchor match {
-      case None => 0L
-      case Some(a) =>
-        val dead = versions.filter(_ < a)
-        if (dead.isEmpty) return 0L
-        // metric maxima AND physical column names roll forward: the
-        // dead commits' schemas are the fresh-name collision set
-        // ([[usedPhysicalNames]]) — deleting them without rolling the
-        // names would let a later evolve-append resurrect a dropped
-        // physical column's bytes. The marker key records that the
-        // ledger has rolled names SINCE ITS FIRST CLEANUP: a ledger
-        // begun by a pre-name-rolling release already lost names and
-        // must never acquire the marker (stamping it now would make
-        // usedPhysicalNames trust a set with a hole in it).
-        val prev = readMetricsRollup()
-        val seed =
-          if (Files.exists(rollupFile) && !prev.contains(physRolledKey))
-            prev
-          else prev.updated(physRolledKey, 1L)
-        val rolled = dead.foldLeft(seed) { (acc, v) =>
-          val c = parseCommit(v)
-          val cm = c.columnMap.getOrElse(Map.empty)
-          val withNames = org.apache.spark.sql.types.DataType
-            .fromJson(c.schemaJson).asInstanceOf[StructType].fieldNames
-            .foldLeft(acc)((m, n) =>
-              m.updated(physKeyPrefix + physName(cm, n), 1L))
-          c.metrics.foldLeft(withNames) { case (m, (k, x)) =>
-            m.updated(k, math.max(m.getOrElse(k, Long.MinValue), x))
-          }
-        }
-        val tmp = logDir.resolve(s".tmp-rollup-${UUID.randomUUID()}")
-        implicit val fmt: Formats = DefaultFormats
-        Files.writeString(tmp, Serialization.write(rolled))
-        Files.move(tmp, rollupFile,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        dead.foreach(v => Files.deleteIfExists(commitFile(v)))
-        dead.size.toLong
-    }
+    val dead = anchor.fold(Seq.empty[Long])(a => versions.filter(_ < a))
+    dead.foreach(v => Files.deleteIfExists(commitFile(v)))
+    dead.size.toLong
   }
 
   /** VACUUM ... DRY RUN (Delta's preview): the files a vacuum at this
@@ -4583,6 +4554,55 @@ object GraftTable {
       partitionBy: Seq[String] = Nil,
       partValues: Map[String, Map[String, String]] = Map.empty)
 
+  /** The commit format this build writes and reads: every commit
+    * carries it, and a commit without it (a log written before the
+    * protocol state moved out of `metrics`) is refused.
+    */
+  private[tables] val CommitFormat = 2
+
+  private val identityKey = "identity:highWater"
+
+  /** Protocol state, carried whole by every RESOLVED commit:
+    *  - `watermarks`: max-folded counters — exactly-once sink batch ids
+    *    (`txn:<app>`), COPY INTO markers (`copy:<md5>`), the identity
+    *    high water and MV source/dimension versions;
+    *  - `retired`: physical column names a commit removed from the
+    *    schema (DROP, OVERWRITE, RESTORE), the fresh-name collision set
+    *    beyond the current schema.
+    * [[GraftTable.commit]] folds a commit's additions into its
+    * parent's state (max, union); a delta commit stores only the
+    * entries that changed, a full commit stores all of it.
+    */
+  private[tables] case class TableState(
+      watermarks: Option[Map[String, Long]] = None,
+      retired: Option[List[String]] = None) {
+    def marks: Map[String, Long] = watermarks.getOrElse(Map.empty)
+    def retiredNames: Set[String] = retired.getOrElse(Nil).toSet
+    def fold(o: TableState): TableState =
+      if (o == TableState.empty) this
+      else TableState.of(
+        o.marks.foldLeft(marks) { case (m, (k, x)) =>
+          m.updated(k, m.get(k).fold(x)(math.max(_, x)))
+        },
+        retiredNames ++ o.retiredNames)
+    /** The entries `parent` does not already hold. */
+    def since(parent: TableState): TableState = TableState.of(
+      marks.filter { case (k, x) => !parent.marks.get(k).contains(x) },
+      retiredNames -- parent.retiredNames)
+  }
+
+  private[tables] object TableState {
+    val empty: TableState = TableState()
+    def of(marks: Map[String, Long],
+        names: Set[String] = Set.empty): TableState =
+      TableState(if (marks.isEmpty) None else Some(marks),
+        if (names.isEmpty) None else Some(names.toList.sorted))
+  }
+
+  /** One log entry. `metrics` are this commit's operation metrics
+    * (DESCRIBE HISTORY's `operation_metrics`); protocol state lives in
+    * `state` ([[TableState]]) and `format` stamps [[CommitFormat]].
+    */
   private[tables] case class Commit(version: Long, timestampMs: Long,
       operation: String, files: List[String], schemaJson: String,
       metrics: Map[String, Long],
@@ -4603,7 +4623,11 @@ object GraftTable {
       // [[GraftTable.readCommit]]. Absent on full commits (every
       // pre-checkpointing log — read-compatible).
       delta: Option[Boolean] = None,
-      removes: Option[List[String]] = None)
+      removes: Option[List[String]] = None,
+      state: Option[TableState] = None,
+      format: Option[Int] = None) {
+    def carried: TableState = state.getOrElse(TableState.empty)
+  }
 
   /** Create a new table at `path` from `df` (errors if a log exists).
     * With `partitionBy`, the table is PARTITIONED: every write lands
@@ -4647,10 +4671,10 @@ object GraftTable {
     }
   }
 
-  /** `extraMetrics` ride the CREATE commit itself — a caller whose
-    * watermark must be transactional with the seed data (the
-    * maintained-view create) lands both in ONE commit instead of a
-    * create(empty)+overwrite pair (guide §1.2: one write job, one
+  /** `marks` (watermarks) ride the CREATE commit's protocol state — a
+    * caller whose watermark must be transactional with the seed data
+    * (the maintained-view create) lands both in ONE commit instead of
+    * a create(empty)+overwrite pair (guide §1.2: one write job, one
     * commit).
     */
   def create(spark: SparkSession, path: String, df: DataFrame,
@@ -4659,7 +4683,7 @@ object GraftTable {
       identity: Option[String] = None,
       bucketBy: Seq[String] = Nil,
       numBuckets: Int = 0,
-      extraMetrics: Map[String, Long] = Map.empty): GraftTable = {
+      marks: Map[String, Long] = Map.empty): GraftTable = {
     val root = Paths.get(path)
     val t = new GraftTable(spark, root)
     require(!Files.exists(t.logDir), s"table already exists at $path")
@@ -4727,15 +4751,15 @@ object GraftTable {
       // CREATE
       Files.createDirectories(t.logDir)
       t.commit("CREATE", -1L, w.files, seeded.schema,
-        Map("numAddedFiles" -> w.files.size.toLong) ++
-          hw.map(t.identityKey -> _).toMap ++ extraMetrics,
+        Map("numAddedFiles" -> w.files.size.toLong),
         t.collectStats(w.files),
         newPartValues = w.partValues,
         newProperties = tzProp,
         partitionByOpt = if (partitionBy.isEmpty) None else Some(partitionBy),
         generatedOpt = if (generated.isEmpty) None else Some(generated),
         identityOpt = identity,
-        bucketByOpt = bkSpec)
+        bucketByOpt = bkSpec,
+        state = TableState.of(hw.map(identityKey -> _).toMap ++ marks))
       t
     } finally idCleanup()
   }
@@ -4866,14 +4890,7 @@ object GraftTable {
     t.commit("CLONE", -1L, absFiles,
       org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
         .asInstanceOf[StructType],
-      Map("sourceVersion" -> v) ++
-        // a versioned clone's identity high water is AS OF v, not
-        // HEAD — later source appends' ids belong to the source
-        (if (c.identityCol.isDefined)
-          Map(src.identityKey -> src.listVersions().filter(_ <= v)
-            .flatMap(vv => src.readCommit(vv).metrics.get(src.identityKey))
-            .maxOption.getOrElse(-1L))
-        else Map.empty),
+      Map("sourceVersion" -> v),
       absStats,
       c.constraints.getOrElse(Map.empty),
       // DV tombstones key on the source's absolute file paths — which
@@ -4889,9 +4906,23 @@ object GraftTable {
       generatedOpt = c.generated,
       identityOpt = c.identityCol,
       bucketByOpt = for { b <- c.bucketBy; n <- c.numBuckets }
-        yield (b: Seq[String], n))
+        yield (b: Seq[String], n),
+      state = cloneState(c))
     t
   }
+
+  /** The protocol state a clone of commit `c` starts from: the
+    * identity high water AS OF `c` (later source appends' ids belong
+    * to the source; the carried state holds it even after log
+    * retention pruned the commits that assigned it) and the retired
+    * physical names (the clone references or copies files that may
+    * hold them). Sink and COPY INTO watermarks stay with the source.
+    */
+  private def cloneState(c: Commit): TableState =
+    TableState.of(
+      c.carried.marks.filter { case (k, _) =>
+        c.identityCol.isDefined && k == identityKey },
+      c.carried.retiredNames)
 
   /** DEEP CLONE (Delta `CREATE TABLE ... DEEP CLONE` analog): a new
     * table whose data files are COPIED into its own directory in one
@@ -4918,11 +4949,6 @@ object GraftTable {
     require(!Files.exists(t.logDir), s"table already exists at $dstPath")
     val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
       .asInstanceOf[StructType]
-    val idHw = if (c.identityCol.isDefined)
-      src.listVersions().filter(_ <= v)
-        .flatMap(vv => src.readCommit(vv).metrics.get(src.identityKey))
-        .maxOption.getOrElse(-1L)
-    else -2L
     if (c.dv.exists(_.nonEmpty)) {
       // merge-on-read state: materialize the masked snapshot. The
       // clone's files carry LOGICAL names (fresh physical=logical
@@ -4953,8 +4979,7 @@ object GraftTable {
       // byte-copy branch below already orders it this way)
       Files.createDirectories(t.logDir)
       t.commit("DEEP_CLONE", -1L, w.files, data.schema,
-        Map("sourceVersion" -> v, "numAddedFiles" -> w.files.size.toLong) ++
-          (if (idHw != -2L) Map(src.identityKey -> idHw) else Map.empty),
+        Map("sourceVersion" -> v, "numAddedFiles" -> w.files.size.toLong),
         t.collectStats(w.files, genZone = srcZone),
         c.constraints.getOrElse(Map.empty),
         newPartValues = w.partValues,
@@ -4963,7 +4988,8 @@ object GraftTable {
         generatedOpt = c.generated,
         identityOpt = c.identityCol,
         bucketByOpt = for { b <- c.bucketBy; n <- c.numBuckets }
-          yield (b: Seq[String], n))
+          yield (b: Seq[String], n),
+        state = cloneState(c))
       // the byte-copy path carries sidecars with the files; this path
       // wrote fresh files, so a declared bloom index backfills here
       if (t.bloomColumns.nonEmpty) t.rebuildBloomIndex()
@@ -5011,8 +5037,7 @@ object GraftTable {
     t.commit("DEEP_CLONE", -1L, c.files.map(mapping), schema,
       Map("sourceVersion" -> v,
         "numAddedFiles" -> c.files.size.toLong,
-        "numCopiedBytes" -> copiedBytes) ++
-        (if (idHw != -2L) Map(src.identityKey -> idHw) else Map.empty),
+        "numCopiedBytes" -> copiedBytes),
       c.stats.getOrElse(Map.empty).map { case (f, s) => mapping(f) -> s },
       c.constraints.getOrElse(Map.empty),
       newPartValues = c.partValues.getOrElse(Map.empty).map {
@@ -5023,7 +5048,8 @@ object GraftTable {
       generatedOpt = c.generated,
       identityOpt = c.identityCol,
       bucketByOpt = for { b <- c.bucketBy; n <- c.numBuckets }
-        yield (b: Seq[String], n))
+        yield (b: Seq[String], n),
+      state = cloneState(c))
     t
   }
 

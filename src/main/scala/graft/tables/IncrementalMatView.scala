@@ -59,8 +59,8 @@ import org.apache.spark.sql.functions._
   * Scale shape (100 TB): refresh cost is O(changed rows) + an
   * overwrite of the view itself (aggregate-sized, not fact-sized) —
   * a broad UPDATE feeds its blast radius through, a trickle append
-  * costs a trickle. The reflected source version rides in the view
-  * table's commit metrics, so the watermark is transactional with
+  * costs a trickle. The reflected source version is a watermark in
+  * the view table's carried protocol state, so it is transactional with
   * the view data and survives restarts; a MERGE whose feed falls
   * back to ambiguous `upsert` tags (pre-CDC legacy commits) triggers
   * a full recompute rather than a wrong delta.
@@ -187,7 +187,7 @@ class IncrementalMatView private (spark: SparkSession,
   }
 
   /** Source version the view currently reflects. */
-  def reflectedVersion: Long = mv.maxMetric(SourceVersionKey).getOrElse(-1L)
+  def reflectedVersion: Long = mv.watermark(SourceVersionKey).getOrElse(-1L)
 
   /** Each dimension's latest version, captured ONCE per refresh (and
     * once in create): the same snapshot drives both the change check
@@ -201,7 +201,7 @@ class IncrementalMatView private (spark: SparkSession,
   private[tables] def dimVersions: Seq[Long] =
     dimTables.map(_._1.latestVersion)
 
-  private def dimVersionMetrics(vs: Seq[Long]): Map[String, Long] =
+  private def dimVersionMarks(vs: Seq[Long]): Map[String, Long] =
     vs.zipWithIndex.map { case (v, i) => dimVersionKey(i) -> v }.toMap
 
   /** The frame the affected-group recompute reads: a stats-pruned
@@ -253,11 +253,11 @@ class IncrementalMatView private (spark: SparkSession,
     // commit's recorded watermark.
     val dimVs = dimVersions
     val dimsChanged = dimVs.zipWithIndex.exists { case (v, i) =>
-      v > mv.maxMetric(dimVersionKey(i)).getOrElse(-1L) }
+      v > mv.watermark(dimVersionKey(i)).getOrElse(-1L) }
     if (dimsChanged) {
       mv.overwrite(
         nullableFrame(aggregateOf(prep(source.snapshotAt(to)))),
-        Map(SourceVersionKey -> to) ++ dimVersionMetrics(dimVs))
+        Map(SourceVersionKey -> to) ++ dimVersionMarks(dimVs))
       applyRetention()
       return to
     }
@@ -305,7 +305,7 @@ class IncrementalMatView private (spark: SparkSession,
     if (hasUpsert) {
       mv.overwrite(
         nullableFrame(aggregateOf(prep(source.snapshotAt(to)))),
-        Map(SourceVersionKey -> to) ++ dimVersionMetrics(dimVs))
+        Map(SourceVersionKey -> to) ++ dimVersionMarks(dimVs))
       applyRetention()
       return to
     }
@@ -394,7 +394,7 @@ class IncrementalMatView private (spark: SparkSession,
         folded.unionByName(recomputed)
       }
     mv.overwrite(nullableFrame(merged),
-      Map(SourceVersionKey -> to) ++ dimVersionMetrics(dimVs))
+      Map(SourceVersionKey -> to) ++ dimVersionMarks(dimVs))
     } finally {
       if (affectedPlus != null) affectedPlus.unpersist(): Unit
     }
@@ -586,8 +586,8 @@ object IncrementalMatView {
     * `dims` joins dimension tables (path, factKey, dimKey) into the
     * view — fact deltas FOLD as usual through a broadcast left join,
     * and a dimension CHANGE triggers a full recompute at the next
-    * refresh (per-dim version watermarks in the view's commit
-    * metrics), because folded rows joined the old dim values and no
+    * refresh (per-dim version watermarks in the view's carried
+    * protocol state), because folded rows joined the old dim values and no
     * fact delta can repair them.
     */
   def create(spark: SparkSession, source: GraftTable, mvPath: String,
@@ -638,12 +638,12 @@ object IncrementalMatView {
     // refresh recomputes (same TOCTOU posture as refresh())
     val dimVs = handle.dimVersions
     val initial = handle.aggregateOf(handle.prep(source.snapshotAt(v)))
-    // the watermark metrics ride the CREATE commit itself — one write
+    // the watermarks ride the CREATE commit itself — one write
     // job and one commit instead of a create(empty)+overwrite pair
     // (guide §1.2; the pair cost one extra write job per view create)
     val mv = GraftTable.create(spark, mvPath,
       handle.nullableFrame(initial),
-      extraMetrics = Map(SourceVersionKey -> v) ++
+      marks = Map(SourceVersionKey -> v) ++
         dimVs.zipWithIndex.map { case (dv, i) =>
           dimVersionKey(i) -> dv }.toMap)
     // the view is SELF-DESCRIBING: its definition rides in its own

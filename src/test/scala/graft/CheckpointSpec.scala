@@ -171,7 +171,7 @@ class CheckpointSpec extends SparkSpec {
     val t = GraftTable.create(spark, dir, Seq((1L, "a")).toDF("id", "v"))
     t.append(Seq((2L, "b")).toDF("id", "v"))
     // an exactly-once sink watermark committed EARLY — its carrying
-    // commit will age out; the rollup must preserve it
+    // commit will age out; the carried state must preserve it
     t.appendIfNew(Seq((3L, "c")).toDF("id", "v"), batchId = 7L,
       appId = "sinkApp")
     // inflate the version count with metadata-only commits (fast) up
@@ -203,7 +203,7 @@ class CheckpointSpec extends SparkSpec {
     // below the anchor: the version-unavailable error names retention
     val e = intercept[IllegalArgumentException] { t2.snapshotAt(2) }
     assert(e.getMessage.contains("log retention"))
-    // the aged-out txn watermark survived via the rollup: the same
+    // the aged-out txn watermark survived in the carried state: the same
     // batch replayed is STILL a no-op, not a duplicate append
     assert(t2.lastStreamBatchId("sinkApp") === 7L)
     t2.appendIfNew(Seq((99L, "dup")).toDF("id", "v"), batchId = 7L,

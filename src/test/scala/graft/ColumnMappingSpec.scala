@@ -84,9 +84,9 @@ class ColumnMappingSpec extends SparkSpec {
     val t2 = GraftTable.load(spark, dir)
     t2.setProperties(Map("graft.logRetention.hours" -> "168"))
     t2.vacuum()
-    // the collision set now rides the rollup sidecar: the evolving
-    // append must neither crash on a missing commit file nor map the
-    // re-added logical name onto the dropped physical bytes
+    // the collision set rides the carried state's retired names: the
+    // evolving append must neither crash on a missing commit file nor
+    // map the re-added logical name onto the dropped physical bytes
     val t3 = GraftTable.load(spark, dir)
     t3.append(Seq((2L, 2.0, "new")).toDF("id", "x", "payload"),
       evolve = true)

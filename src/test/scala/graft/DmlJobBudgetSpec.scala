@@ -17,46 +17,49 @@ import org.json4s.jackson.JsonMethods
   * Spark jobs of each DML op, on the four table layouts (plain,
   * partitioned, bucketed, column-mapped). Every op runs in a fixed
   * sequence on a small table, so the counts are deterministic. A
-  * budget may only go down.
+  * budget may only go down. The CDC files a commit records are
+  * budgeted too: their count follows the write tasks that hold change
+  * rows, so a partitioned table, whose DML touches one file per
+  * partition, writes more of them than a plain one.
   */
 class DmlJobBudgetSpec extends SparkSpec {
   import spark.implicits._
 
-  /** (layout, op) -> (write commands, jobs). Every layout writes a
+  /** (layout, op) -> (write commands, jobs, CDC files). Every layout writes a
     * DML op's data and change rows in one tagged job; the second
     * write command of replaceWhere is its incoming slice, and of the
     * merge-on-read ops their deletion vectors.
     */
-  private val budgets: Map[(String, String), (Int, Int)] = Map(
-    ("plain", "delete") -> (1, 3),
-    ("plain", "update") -> (1, 3),
-    ("plain", "merge") -> (1, 17),
-    ("plain", "replaceWhere") -> (2, 5),
-    ("plain", "deleteMor") -> (2, 5),
-    ("plain", "updateMor") -> (2, 8),
-    ("plain", "mergeMor") -> (2, 26),
-    ("partitioned", "delete") -> (1, 3),
-    ("partitioned", "update") -> (1, 3),
-    ("partitioned", "merge") -> (1, 17),
-    ("partitioned", "replaceWhere") -> (2, 5),
-    ("partitioned", "deleteMor") -> (2, 5),
-    ("partitioned", "updateMor") -> (2, 8),
-    ("partitioned", "mergeMor") -> (2, 26),
-    ("partitioned", "overwritePartitions") -> (2, 8),
-    ("bucketed", "delete") -> (1, 4),
-    ("bucketed", "update") -> (1, 4),
-    ("bucketed", "merge") -> (1, 18),
-    ("bucketed", "replaceWhere") -> (2, 7),
-    ("bucketed", "deleteMor") -> (2, 5),
-    ("bucketed", "updateMor") -> (2, 9),
-    ("bucketed", "mergeMor") -> (2, 27),
-    ("mapped", "delete") -> (1, 3),
-    ("mapped", "update") -> (1, 3),
-    ("mapped", "merge") -> (1, 17),
-    ("mapped", "replaceWhere") -> (2, 5),
-    ("mapped", "deleteMor") -> (2, 5),
-    ("mapped", "updateMor") -> (2, 8),
-    ("mapped", "mergeMor") -> (2, 26))
+  private val budgets: Map[(String, String), (Int, Int, Int)] = Map(
+    ("plain", "delete") -> (1, 3, 1),
+    ("plain", "update") -> (1, 3, 1),
+    ("plain", "merge") -> (1, 17, 3),
+    ("plain", "replaceWhere") -> (2, 5, 3),
+    ("plain", "deleteMor") -> (2, 5, 1),
+    ("plain", "updateMor") -> (2, 8, 2),
+    ("plain", "mergeMor") -> (2, 26, 3),
+    ("partitioned", "delete") -> (1, 3, 4),
+    ("partitioned", "update") -> (1, 3, 1),
+    ("partitioned", "merge") -> (1, 17, 5),
+    ("partitioned", "replaceWhere") -> (2, 5, 6),
+    ("partitioned", "deleteMor") -> (2, 5, 2),
+    ("partitioned", "updateMor") -> (2, 8, 2),
+    ("partitioned", "mergeMor") -> (2, 26, 3),
+    ("partitioned", "overwritePartitions") -> (2, 8, 5),
+    ("bucketed", "delete") -> (1, 4, 3),
+    ("bucketed", "update") -> (1, 4, 1),
+    ("bucketed", "merge") -> (1, 18, 2),
+    ("bucketed", "replaceWhere") -> (2, 7, 6),
+    ("bucketed", "deleteMor") -> (2, 5, 2),
+    ("bucketed", "updateMor") -> (2, 9, 1),
+    ("bucketed", "mergeMor") -> (2, 27, 2),
+    ("mapped", "delete") -> (1, 3, 1),
+    ("mapped", "update") -> (1, 3, 1),
+    ("mapped", "merge") -> (1, 17, 3),
+    ("mapped", "replaceWhere") -> (2, 5, 3),
+    ("mapped", "deleteMor") -> (2, 5, 1),
+    ("mapped", "updateMor") -> (2, 8, 2),
+    ("mapped", "mergeMor") -> (2, 26, 3))
 
   private final class Counter extends SparkListener with QueryExecutionListener {
     @volatile var jobs = 0
@@ -117,12 +120,13 @@ class DmlJobBudgetSpec extends SparkSpec {
       counter.jobs = 0; counter.writes = 0
       body()
       ListenerBusDrain(sc)
-      val (w, j) = (counter.writes, counter.jobs)
+      val (w, j, c) = (counter.writes, counter.jobs, cdcFiles(path, t))
       println(f"budget $layout%-12s $op%-20s writes=$w%d jobs=$j%d " +
-        f"cdcFiles=${cdcFiles(path, t)}%d")
-      val (bw, bj) = budgets((layout, op))
+        f"cdcFiles=$c%d")
+      val (bw, bj, bc) = budgets((layout, op))
       assert(w <= bw, s"$layout $op: $w write commands, budget $bw")
       assert(j <= bj, s"$layout $op: $j jobs, budget $bj")
+      assert(c <= bc, s"$layout $op: $c CDC files, budget $bc")
     } finally {
       spark.listenerManager.unregister(counter)
       sc.removeSparkListener(counter)

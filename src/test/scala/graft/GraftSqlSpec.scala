@@ -323,7 +323,7 @@ class GraftSqlSpec extends SparkSpec {
     t.copyInto(src)
     assert(t.snapshot().count() === 4)
     assert(t.snapshot().where($"id" === 3L).count() === 1)
-    // the ledger survives LOG RETENTION through the rollup sidecar
+    // the ledger survives LOG RETENTION in the carried protocol state
     (1 to 25).foreach(i => t.setProperties(Map("touch" -> i.toString)))
     t.setProperties(Map("graft.logRetention.versions" -> "5"))
     t.vacuum()

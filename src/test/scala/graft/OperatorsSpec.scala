@@ -1225,16 +1225,13 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("exportShardsIngest: a LEGACY state table (no pipeline column) " +
-      "is adopted by the first pipeline that touches it; a second " +
-      "pipeline is then refused") {
-    import org.apache.spark.sql.functions._
+      "is refused with an error that says to recreate the export") {
     val docs = Tables.load(spark, sf, "documents")
     val stage = java.nio.file.Files
       .createTempDirectory("graft_expadopt_").toString
     operators.TextAnalysis.exportShardsIngest(spark, stage,
       docs.where($"doc_id" < 100), 0L)
     // rebuild the state table in the PRE-pipeline-column 3-col shape
-    // (what an r16-era export left on disk)
     val stPath = java.nio.file.Paths.get(stage, "state")
     val legacyRows = graft.tables.GraftTable
       .load(spark, stPath.toString).snapshot()
@@ -1249,31 +1246,17 @@ class OperatorsSpec extends SparkSpec {
     graft.tables.GraftTable.create(spark, stPath.toString,
       legacyRows.toIndexedSeq
         .toDF("batch_id", "end_offset", "max_doc"))
-    // a non-default pipeline ADOPTS the legacy export (the r17
-    // coercion to owner "" would refuse its rightful continuation)
-    operators.TextAnalysis.exportShardsIngest(spark, stage,
-      docs.where($"doc_id" >= 100 && $"doc_id" < 200), 1L,
-      pipelineId = ":adopter")
-    val st = graft.tables.GraftTable.load(spark, stPath.toString)
-      .snapshot()
-    assert(st.columns.contains("pipeline"),
-      "adoption must backfill the pipeline column on the next append")
-    assert(st.where($"pipeline" === ":adopter").count() === 1L)
-    // the adopter's replay is still a no-op (legacy-namespace
-    // watermarks carry the exactly-once contract across adoption)
-    operators.TextAnalysis.exportShardsIngest(spark, stage,
-      docs.where($"doc_id" >= 100 && $"doc_id" < 200), 1L,
-      pipelineId = ":adopter")
-    assert(graft.tables.GraftTable.load(spark,
+    val asg = graft.tables.GraftTable.load(spark,
       java.nio.file.Paths.get(stage, "assignments").toString)
-      .snapshot().count() === 200L)
-    // adoption is single-owner: everyone else now refuses
+    val v = asg.latestVersion
     val err = intercept[IllegalArgumentException] {
       operators.TextAnalysis.exportShardsIngest(spark, stage,
-        docs.where($"doc_id" >= 200 && $"doc_id" < 300), 2L,
-        pipelineId = ":other")
+        docs.where($"doc_id" >= 100 && $"doc_id" < 200), 1L,
+        pipelineId = ":adopter")
     }
-    assert(err.getMessage.contains("owned by"), err.getMessage)
+    assert(err.getMessage.contains("no 'pipeline' column") &&
+      err.getMessage.contains("recreate the export"), err.getMessage)
+    assert(asg.latestVersion === v, "a refused batch must land nothing")
   }
 
   test("packTokensMaterialize: landed token-id arrays re-derive the " +

@@ -1086,27 +1086,15 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("curationPipelineId: respelling a checkpoint resolves to the " +
-      "same canonical identity; a legacy raw-namespace index keeps " +
-      "its raw identity (no lock-out)") {
+      "same canonical identity") {
     val stage = Files.createTempDirectory("graft_curid_spec_")
-    val idx = stage.resolve("idx").toString
     val rel = stage.resolve("ck").toString
-    // fresh index: relative-ish and absolute spellings of one
-    // location resolve identically (the canonical id)
-    val (a, _) = Streams.curationPipelineId(spark, rel, idx)
-    val (b, _) = Streams.curationPipelineId(spark, rel + "/./", idx)
+    // relative-ish and absolute spellings of one location resolve
+    // identically (the canonical id)
+    val (a, appA) = Streams.curationPipelineId(rel)
+    val (b, _) = Streams.curationPipelineId(rel + "/./")
     assert(a === b, "respelling the checkpoint must not change the id")
-    // a LEGACY index (admission watermarks under the raw ':<string>'
-    // namespace, the r17 spelling) keeps the raw identity
-    val raw = "graft_curid_rel_ck"
-    val docs = Tables.load(spark, sf, "documents").limit(20)
-    graft.operators.Dedup.incrementalIndex(spark, idx, docs,
-      batchId = 0L, pipelineId = ":" + raw)
-    val (legacyId, legacyApp) =
-      Streams.curationPipelineId(spark, raw, idx)
-    assert(legacyId === ":" + raw,
-      "a legacy raw-namespace pipeline must keep its identity")
-    assert(legacyApp === raw)
+    assert(a === ":" + appA)
   }
 
   test("exportStream: streamed cycles accumulate to the one-shot " +

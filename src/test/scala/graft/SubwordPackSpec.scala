@@ -51,41 +51,6 @@ class SubwordPackSpec extends SparkSpec {
     assert(err.getMessage.contains("capped"), err.getMessage)
   }
 
-  test("exportShardsIngest mixed-era adoption covers a DIFFERENT " +
-      "pipeline id: a batch landed pre-upgrade under another id's " +
-      "suffixed namespace is still recognized on replay (the state " +
-      "row's existence proves the landing)") {
-    val docs = Tables.load(spark, sf, "documents")
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_mixera2_").toString
-    val batch0 = docs.where($"doc_id" < 100)
-    val assigned = operators.TextAnalysis.exportShards(batch0, 2048L)
-      .withColumn("batch_id", lit(0L))
-    val asgPath = java.nio.file.Paths.get(stage, "assignments").toString
-    val stPath = java.nio.file.Paths.get(stage, "state").toString
-    graft.tables.GraftTable.create(spark, asgPath, assigned.limit(0))
-      .appendIfNew(assigned, 0L,
-        appId = operators.TextAnalysis.exportAssignAppId + ":a")
-    val endOffset = assigned
-      .agg(max($"tokens_before" + $"n_tokens")).head().getLong(0)
-    val maxDoc = batch0.agg(max($"doc_id")).head().getLong(0)
-    graft.tables.GraftTable.create(spark, stPath,
-        Seq.empty[(Long, Long, Long)]
-          .toDF("batch_id", "end_offset", "max_doc"))
-      .appendIfNew(
-        Seq((0L, endOffset, maxDoc))
-          .toDF("batch_id", "end_offset", "max_doc"),
-        0L, appId = operators.TextAnalysis.exportStateAppId + ":a")
-    // the post-upgrade pipeline RENAMED its id (":b"): the suffixed
-    // ":a" watermark is unknowable, but the state row exists — the
-    // replay must re-land nothing
-    operators.TextAnalysis.exportShardsIngest(spark, stage, batch0, 0L,
-      pipelineId = ":b")
-    assert(graft.tables.GraftTable.load(spark, asgPath)
-      .snapshot().count() === batch0.count(),
-      "a cross-id mixed-era replay re-landed the batch")
-  }
-
   test("vocabSegmentIds and vocabSegments share the step: array " +
       "length == counted measure on the real corpus") {
     val docs = Tables.load(spark, sf, "documents")
@@ -388,49 +353,6 @@ class SubwordPackSpec extends SparkSpec {
       docs.where($"doc_id" < 170), 0L, vocab = Some(pinned))
     assert(graft.tables.GraftTable.load(spark, fragsPath)
       .snapshot().count() === n)
-  }
-
-  test("exportShardsIngest mixed-era adoption: a batch landed under " +
-      "the SUFFIXED namespace on a legacy-shaped table is recognized " +
-      "on replay — no duplicate token ranges") {
-    val docs = Tables.load(spark, sf, "documents")
-    val stage = java.nio.file.Files
-      .createTempDirectory("graft_mixera_").toString
-    // simulate the prior release: 3-column state + watermarks under
-    // appId + pipelineId, table shape still legacy
-    val batch0 = docs.where($"doc_id" < 100)
-    val assigned = operators.TextAnalysis.exportShards(batch0, 2048L)
-      .withColumn("batch_id", lit(0L))
-    val asgPath = java.nio.file.Paths.get(stage, "assignments").toString
-    val stPath = java.nio.file.Paths.get(stage, "state").toString
-    val asgT = graft.tables.GraftTable.create(spark, asgPath,
-      assigned.limit(0))
-    asgT.appendIfNew(assigned, 0L,
-      appId = operators.TextAnalysis.exportAssignAppId + ":p")
-    val endOffset = assigned
-      .agg(max($"tokens_before" + $"n_tokens")).head().getLong(0)
-    val maxDoc = batch0.agg(max($"doc_id")).head().getLong(0)
-    val stT = graft.tables.GraftTable.create(spark, stPath,
-      Seq.empty[(Long, Long, Long)]
-        .toDF("batch_id", "end_offset", "max_doc"))
-    stT.appendIfNew(
-      Seq((0L, endOffset, maxDoc))
-        .toDF("batch_id", "end_offset", "max_doc"),
-      0L, appId = operators.TextAnalysis.exportStateAppId + ":p")
-    // the upgraded release replays batch 0 with the same pipeline id:
-    // legacyOrigin forces nsId '' — the suffixed watermark must still
-    // cover it (the silent re-land this guard exists to refuse)
-    operators.TextAnalysis.exportShardsIngest(spark, stage, batch0, 0L,
-      pipelineId = ":p")
-    assert(graft.tables.GraftTable.load(spark, asgPath)
-      .snapshot().count() === batch0.count(),
-      "mixed-era replay re-landed the batch — duplicate token ranges")
-    // and the pipeline continues normally from there
-    operators.TextAnalysis.exportShardsIngest(spark, stage,
-      docs.where($"doc_id" >= 100 && $"doc_id" < 200), 1L,
-      pipelineId = ":p")
-    assert(graft.tables.GraftTable.load(spark, asgPath)
-      .snapshot().count() === 200L)
   }
 
   test("ml_threshold_fixed: the relational sweep picks the brute-" +
