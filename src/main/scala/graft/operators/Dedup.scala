@@ -893,8 +893,7 @@ object Dedup {
     * and blunt the pruning) and bin-pack the sigs — their bloom
     * sidecars rebuild with the rewrite (every GraftTable write path
     * builds sidecars for declared columns), so the band probe's
-    * per-file pruning survives compaction; a pre-bloom legacy index
-    * gets the declaration + a backfill here. Both are ordinary
+    * per-file pruning survives compaction. Both are ordinary
     * GraftTable commits: every commit carries the idempotency
     * watermarks forward in its protocol state, so they survive the
     * rewrite, and a concurrent batch conflicts safely instead of
@@ -933,21 +932,11 @@ object Dedup {
     val n = math.max(1L, (shT.rowCount.getOrElse(0L) +
       targetDocsPerFile - 1) / targetDocsPerFile).toInt
     shT.clusterBy(n, "doc_id")
+    // the sigs table declares its bloom index at creation
+    // (sketchAndLoad), so compaction rebuilds sidecars with the files
     val sigsT = GraftTable.load(spark,
       java.nio.file.Paths.get(indexPath, "sigs").toString)
-    val declaredCols = sigsT.properties.get("graft.bloom.columns")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Nil)
-    val hadBloom = declaredCols.contains("bsig")
-    // APPEND to any existing declaration (setProperties replaces per
-    // key — a bare overwrite would silently drop other bloom columns)
-    if (!hadBloom) sigsT.setProperties(Map("graft.bloom.columns" ->
-      (declaredCols :+ "bsig").mkString(",")))
     sigsT.compactToSize()
-    // a pre-bloom legacy index: compaction only builds sidecars for
-    // files it REWRITES — already-right-sized files would stay
-    // sidecar-less forever, so backfill the remainder explicitly
-    if (!hadBloom) sigsT.rebuildBloomIndex()
     // the re-cluster/compaction strands the per-batch files as dead
     // versions; nightly maintenance reclaims them too (bounded by the
     // retention window so concurrent probes finish their reads)

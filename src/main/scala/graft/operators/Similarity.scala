@@ -1169,10 +1169,7 @@ object Similarity {
     * (partitionsInfo's stats-derived counts); under live deletion
     * vectors (footer counts dishonest) the counts come from footer
     * rows MINUS the DV tombstones — one O(dv) aggregation over the
-    * tombstone parquet, still never a corpus read. Only a stats-less
-    * legacy layout falls back to ONE groupBy-count scan, and that
-    * fallback logs itself (a maintenance *metadata* probe silently
-    * going O(corpus) deserves a trace).
+    * tombstone parquet, still never a corpus read.
     */
   private[graft] def cellSkew(spark: SparkSession,
       indexPath: String): Double = {
@@ -1180,14 +1177,7 @@ object Similarity {
       java.nio.file.Paths.get(indexPath, "assignments").toString)
     val info = t.partitionsInfo().select(col("num_rows")).collect()
     val counts: Seq[Long] =
-      if (info.exists(_.isNullAt(0)))
-        t.partitionRowCountsDvAdjusted().getOrElse {
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"[graft] cellSkew($indexPath): no footer stats — " +
-              "falling back to a full groupBy-count scan")
-          t.snapshot().groupBy(col("cent_id")).count()
-            .select(col("count")).collect().map(_.getLong(0)).toSeq
-        }
+      if (info.exists(_.isNullAt(0))) t.partitionRowCountsDvAdjusted()
       else info.map(_.getLong(0)).toSeq
     val k = loadCents(spark, indexPath).size
     val total = counts.sum

@@ -1297,9 +1297,9 @@ object TextAnalysis {
     // ledger (O(batches): n_sequences = max(max_seq)+1 over the
     // gapless stream, fills/ids additive) WHEN the ledger covers
     // every landed batch; a pack mid-crash-window (fragments landed,
-    // rollup append pending replay) or a pre-rollup-era pack falls
-    // back to the LIVE re-aggregation over the slim fragment arrays
-    // — the honest cost until the ledger self-heals.
+    // rollup append pending replay) falls back to the LIVE
+    // re-aggregation over the slim fragment arrays — the honest cost
+    // until the ledger self-heals.
     if (!java.nio.file.Files.exists(p) &&
         java.nio.file.Files.exists(incMeta)) {
       require(java.nio.file.Files.exists(java.nio.file.Paths
@@ -1629,55 +1629,13 @@ object TextAnalysis {
           .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     }
     if (haveVocab) {
-      // BACKFILL a missing sidecar (a pre-meta-era pack, or a crash
-      // between the meta write and the vocab append before the write
-      // was moved first): the first post-upgrade batch's constants
-      // become the pin — but NOT blindly: a replay arriving with the
-      // WRONG seqLen would pin the wrong constant and then refuse
-      // every CORRECT batch forever (the guard entrenching the error
-      // it exists to prevent), so the candidate is CROSS-CHECKED
-      // against the landed fragment geometry first (one aggregate
-      // over the fragments — the rare-backfill-path cost). The
-      // tokenizer needs no geometric witness: every sidecar-less
-      // pack PREDATES the vp measure (the meta write has landed
-      // first since the sidecar existed, and vp was refused before
-      // it did), so its stored offsets are necessarily ws-bound —
-      // a vp arrival refuses instead of pinning subword semantics
-      // onto whitespace offsets and then refusing every correct ws
-      // batch forever.
-      if (!java.nio.file.Files.exists(metaPath)) {
-        require(tokenizer == "ws",
-          "packTokensIngest: this pack has landed batches but no " +
-            "meta sidecar — every pack the backfill path serves " +
-            "predates the vp measure, so its stored offsets are " +
-            s"ws-bound; a '$tokenizer' batch would land subword ids " +
-            "on top of whitespace offsets (re-run with tokenizer=ws; " +
-            "if this pack's sidecar was deleted after a vp creation, " +
-            "restore it — the measure is not derivable from the " +
-            "landed rows)")
-        val fragLog = java.nio.file.Paths.get(packPath, "fragments",
-          "_graft_log")
-        if (java.nio.file.Files.exists(fragLog)) {
-          val landed = GraftTable.load(spark,
-            java.nio.file.Paths.get(packPath, "fragments").toString)
-            .snapshot()
-          val bad = landed.where(
-            (col("carry_in") =!=
-              (col("tokens_before") < col("seq_id") * seqLen)) ||
-            (!col("carry_in") &&
-              expr(s"tokens_before div ${seqLen}L") =!= col("seq_id")) ||
-            (greatest(col("seq_id") * seqLen, col("tokens_before")) +
-              size(col("frag_ids")) > (col("seq_id") + 1L) * seqLen))
-            .limit(1).count()
-          require(bad == 0L,
-            s"packTokensIngest: backfilling the missing meta sidecar " +
-              s"with seqLen $seqLen contradicts the landed fragment " +
-              "geometry (boundaries/carry flags don't tile at that " +
-              "length) — re-run with the pack's ORIGINAL seq_len so " +
-              "the pin records the truth")
-        }
-        writeMeta()
-      }
+      // the meta write lands BEFORE the vocab append, so a pack with a
+      // pinned vocabulary and no sidecar was written by an older
+      // release (or lost its sidecar): its constants are unknown
+      require(java.nio.file.Files.exists(metaPath),
+        s"packTokensIngest: the pack at $packPath has a pinned " +
+          s"vocabulary but no meta sidecar ($metaPath) — its seq_len " +
+          "and measure are unknown; recreate the pack")
       val pinnedMeta = readPackMeta(spark, metaPath)
       require(pinnedMeta.getString(1) == tokenizer,
         s"packTokensIngest: this pack was pinned at tokenizer " +

@@ -704,8 +704,8 @@ object Streams {
             // LANDED content reflects (the ops/debug glance, and the
             // observable the recount spec pins). A replayed epoch
             // must NOT stamp the replay cycle's corpus: if the
-            // assignments landed in an earlier cycle (crash between
-            // the two appends, or a pre-meta-era epoch), the truthful
+            // assignments landed in an earlier cycle (a crash between
+            // the two appends), the truthful
             // state is re-derived from the landed rows themselves —
             // each doc lands once per epoch, so the epoch's row count
             // IS the corpus size its permutation covered.

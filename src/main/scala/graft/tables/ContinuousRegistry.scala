@@ -340,8 +340,8 @@ private[graft] object ContinuousRegistry {
 
   /** The lease, or None when absent/unreadable — an unreadable lease
     * reads as absent (writers publish atomically, so this is a
-    * vanished-mid-read race, not a torn file). A pre-r13 lease with
-    * no staleMs field reads under the flat default.
+    * vanished-mid-read race, not a torn file). Every lease carries
+    * owner, ts and staleMs; one missing any of them is unreadable.
     */
   private def readLease(root: String): Option[Lease] =
     readLeaseAt(leasePath(root))
@@ -354,9 +354,8 @@ private[graft] object ContinuousRegistry {
         for {
           o <- """"owner":"([^"]+)"""".r.findFirstMatchIn(s).map(_.group(1))
           t <- """"ts":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
-        } yield Lease(o, t,
-          """"staleMs":(\d+)""".r.findFirstMatchIn(s)
-            .map(_.group(1).toLong).getOrElse(DefaultStaleMs))
+          st <- """"staleMs":(\d+)""".r.findFirstMatchIn(s).map(_.group(1).toLong)
+        } yield Lease(o, t, st)
       }
     } catch { case scala.util.control.NonFatal(_) => None }
 }

@@ -258,10 +258,11 @@ object GraftSql {
     * and end_offset reads only the file(s) holding the global max
     * tokens_before — the prefix sum is monotone in export order, so
     * the last-positioned row's tokens_before + n_tokens IS the corpus
-    * token total. Tables without usable stats (pre-stats logs, active
-    * deletion vectors) fall back to the full aggregate — correctness
-    * never rides the fast path; an EMPTY assignments table refuses
-    * with a descriptive message instead of surfacing null aggregates.
+    * token total. Tables without usable stats (active deletion
+    * vectors, stats beyond double precision) fall back to the full
+    * aggregate — correctness never rides the fast path; an EMPTY
+    * assignments table refuses with a descriptive message instead of
+    * surfacing null aggregates.
     * Stats travel as doubles, exact through 2⁵³ — far above any real
     * doc id or token offset (100 TB of text ≈ 2·10¹³ tokens).
     * Returns (ledger frame, files read, files total) so specs pin
@@ -275,11 +276,11 @@ object GraftSql {
     val mkRow = (endOffset: Long, maxDoc: Long) =>
       Seq((-1L, endOffset, maxDoc, ""))
         .toDF("batch_id", "end_offset", "max_doc", "pipeline")
-    // the stats-less full aggregate — also the guard rail under the
-    // fast path: footer stats travel as DOUBLES, so a max above 2⁵³
-    // can round UP past the true value and the pruned filter comes
-    // back EMPTY on a non-empty table — that must fall through here,
-    // never NPE or mis-report "zero rows"
+    // the full aggregate — also the guard rail under the fast path:
+    // footer stats travel as DOUBLES, so a max above 2⁵³ can round UP
+    // past the true value and the pruned filter comes back EMPTY on a
+    // non-empty table — that must fall through here, never NPE or
+    // mis-report "zero rows"
     def fullAggregate(): (DataFrame, Int, Int) = {
       val snap = t.snapshot()
       val r = snap.agg(

@@ -130,15 +130,15 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val removed = raw.removes.getOrElse(Nil).toSet
     val files = parent.files.filterNot(removed) ++ raw.files
     val fileSet = files.toSet
-    val stats = parent.stats.getOrElse(Map.empty)
+    val stats = parent.stats
       .filter { case (f, _) => fileSet.contains(f) } ++
-      raw.stats.getOrElse(Map.empty)
+      raw.stats
     val pv = parent.partValues.getOrElse(Map.empty)
       .filter { case (f, _) => fileSet.contains(f) } ++
       raw.partValues.getOrElse(Map.empty)
     val st = parent.carried.fold(raw.carried)
     raw.copy(files = files, removes = None, delta = None,
-      stats = if (stats.isEmpty) None else Some(stats),
+      stats = stats,
       partValues = if (pv.isEmpty) None else Some(pv),
       state = if (st == TableState.empty) None else Some(st))
   }
@@ -182,8 +182,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       // data files are immutable and uniquely named, so an entry for
       // a parent-listed file is identical to the parent's — only the
       // adds' metadata needs to ride in the delta
-      stats = c.stats.map(_.filter { case (f, _) => !parentSet.contains(f) })
-        .filter(_.nonEmpty),
+      stats = c.stats.filter { case (f, _) => !parentSet.contains(f) },
       partValues = c.partValues
         .map(_.filter { case (f, _) => !parentSet.contains(f) })
         .filter(_.nonEmpty),
@@ -501,9 +500,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       sessionValues: Boolean): Option[String] = {
     if (tzDependentGens.isEmpty || inputs.isEmpty) return Some(sessionTz)
     val stats = if (base < 0) Map.empty[String, FileStats]
-      else readCommit(base).stats.getOrElse(Map.empty)
-    val prop = writerTimeZone
-    val zones = inputs.map(f => stats.get(f).flatMap(_.tz).orElse(prop))
+      else readCommit(base).stats
+    val zones = inputs.map(f => stats.get(f).flatMap(_.tz))
     if (zones.exists(_.isEmpty)) return None
     val zs = zones.flatten
     if (!zs.tail.forall(sameZone(zs.head, _))) None
@@ -538,13 +536,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (tzDependentGens.isEmpty) return _ => Some(sessionTz)
     val global = rewriteStampZone(inputs, base, sessionValues = false)
     val stats = if (base < 0) Map.empty[String, FileStats]
-      else readCommit(base).stats.getOrElse(Map.empty)
+      else readCommit(base).stats
     val pv = if (base < 0) Map.empty[String, Map[String, String]]
       else readCommit(base).partValues.getOrElse(Map.empty)
-    val prop = writerTimeZone
     val byTuple: Map[Option[Map[String, String]], Option[String]] =
       inputs.groupBy(pv.get).map { case (tup, fs) =>
-        val zones = fs.map(f => stats.get(f).flatMap(_.tz).orElse(prop))
+        val zones = fs.map(f => stats.get(f).flatMap(_.tz))
         tup -> (if (zones.exists(_.isEmpty)) None else {
           val zs = zones.flatten
           if (zs.tail.forall(sameZone(zs.head, _))) Some(zs.head) else None
@@ -660,56 +657,48 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         rel -> FileStats(mins.toMap, maxs.toMap,
           if (sm.isEmpty) None else Some(sm),
           if (sx.isEmpty) None else Some(sx),
-          Some(nRows),
+          nRows,
           // the stamp is only ever consulted on tables with
           // tz-dependent generated columns, whose data files are all
           // graft-written (gens exist from CREATE) — adopted/
           // CONVERTed files never mislead. A stood-down verdict
-          // (None) is recorded as the explicit sentinel, NOT omitted:
-          // an absent stamp means "pre-feature file" and may be
-          // vouched for by the table-level CREATE-zone record, which
-          // must never happen for files we chose not to stamp.
-          genZone.orElse(Some(GraftTable.unstampedTz)))
+          // records no stamp, which no reader's zone matches.
+          genZone)
       } finally reader.close()
     }.head
   }
 
   /** EXACT row count from commit-log metadata alone — zero scan, the
-    * Delta "SELECT COUNT(*) from stats" fast path. None when any
-    * current file predates row-count stats (older logs, CONVERT
-    * adoptions) or when deletion vectors are active (tombstones
-    * would need their own exact accounting).
+    * Delta "SELECT COUNT(*) from stats" fast path. None when deletion
+    * vectors are active (tombstones would need their own exact
+    * accounting).
     */
   def rowCount: Option[Long] = {
     if (latestVersion < 0) return Some(0L)
     val c = readCommit(latestVersion)
-    if (c.dv.exists(_.nonEmpty)) return None
-    val stats = c.stats.getOrElse(Map.empty)
-    val counts = c.files.map(f => stats.get(f).flatMap(_.rows))
-    if (counts.exists(_.isEmpty)) None else Some(counts.flatten.sum)
+    if (c.dv.exists(_.nonEmpty)) None
+    else Some(c.files.map(c.stats(_).rows).sum)
   }
 
   /** Column MAXIMUM from commit-log footer stats alone — zero scan,
     * the metadata fast path behind O(files) introspection statements
     * (DESCRIBE EXPORT's one-shot ledger). None when any current file
-    * lacks the stat (pre-stats logs, CONVERT adoptions, string-typed
-    * columns) or when deletion vectors are active (a tombstoned max
-    * row would mislead); column-mapped tables resolve the LOGICAL
-    * name through the physical mapping the stats are keyed by.
+    * lacks the stat (string-typed or all-null columns) or when
+    * deletion vectors are active (a tombstoned max row would
+    * mislead); column-mapped tables resolve the LOGICAL name through
+    * the physical mapping the stats are keyed by.
     */
   private[graft] def columnMaxStat(name: String): Option[Double] = {
     if (latestVersion < 0) return None
     val c = readCommit(latestVersion)
     if (c.dv.exists(_.nonEmpty)) return None
     val phys = c.columnMap.getOrElse(Map.empty).getOrElse(name, name)
-    val stats = c.stats.getOrElse(Map.empty)
     // a ZERO-ROW file (the createIfAbsent placeholder) has no column
     // stats and no rows to describe — skip it rather than abort
-    val maxs = c.files.map(f => stats.get(f) match {
-      case Some(st) if st.rows.contains(0L) => Some(None)
-      case Some(st) => st.maxs.get(phys).map(m => Some(m))
-      case None => None
-    })
+    val maxs = c.files.map { f =>
+      val st = c.stats(f)
+      if (st.rows == 0L) Some(None) else st.maxs.get(phys).map(m => Some(m))
+    }
     if (maxs.isEmpty || maxs.exists(_.isEmpty)) None
     else {
       val xs = maxs.flatten.flatten
@@ -721,9 +710,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * files are each single-key (every file's key min == max — the
     * layout one append per key leaves, e.g. per-epoch export
     * appends): key → max(valCol) across that key's files. None when
-    * any file lacks the stats, SPANS keys, or deletion vectors are
-    * active — callers fall back to the full aggregate, so correctness
-    * never rides this fast path.
+    * any file lacks the column stats, SPANS keys, or deletion vectors
+    * are active — callers fall back to the full aggregate, so
+    * correctness never rides this fast path.
     */
   private[graft] def perKeyMaxStat(keyCol: String,
       valCol: String): Option[Map[Long, Double]] = {
@@ -733,19 +722,15 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val cm = c.columnMap.getOrElse(Map.empty)
     val k = cm.getOrElse(keyCol, keyCol)
     val v = cm.getOrElse(valCol, valCol)
-    val stats = c.stats.getOrElse(Map.empty)
     // outer None = abort the fast path (missing or key-spanning
     // stats); inner None = a zero-row placeholder file, skipped
     val perFile: Seq[Option[Option[(Long, Double)]]] = c.files.map { f =>
-      stats.get(f) match {
-        case Some(st) if st.rows.contains(0L) => Some(None)
-        case Some(st) =>
-          (st.mins.get(k), st.maxs.get(k), st.maxs.get(v)) match {
-            case (Some(kmin), Some(kmax), Some(vmax)) if kmin == kmax =>
-              Some(Some(kmin.toLong -> vmax))
-            case _ => None
-          }
-        case None => None
+      val st = c.stats(f)
+      if (st.rows == 0L) Some(None)
+      else (st.mins.get(k), st.maxs.get(k), st.maxs.get(v)) match {
+        case (Some(kmin), Some(kmax), Some(vmax)) if kmin == kmax =>
+          Some(Some(kmin.toLong -> vmax))
+        case _ => None
       }
     }
     if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
@@ -796,7 +781,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // 100k-file tables
     val fileSet = files.toSet
     val carried = if (v == 0) Map.empty[String, FileStats]
-      else readCommit(base).stats.getOrElse(Map.empty)
+      else readCommit(base).stats
         .filter { case (f, _) => fileSet.contains(f) }
     val carriedConstraints =
       if (v == 0) Map.empty[String, String]
@@ -816,26 +801,8 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       if (v == 0) Map.empty[String, String] else columnMapAt(base))
     val constraintsOut =
       replaceConstraints.getOrElse(carriedConstraints ++ newConstraints)
-    val propsOut0 = (if (v == 0) Map.empty[String, String]
+    val propsOut = (if (v == 0) Map.empty[String, String]
       else readCommit(base).properties.getOrElse(Map.empty)) ++ newProperties
-    // per-commit writer zones: once files stamped with a DIFFERENT
-    // zone than the CREATE-time record land, the table-level record
-    // no longer describes "all unstamped files" — drop it so the
-    // legacy fallback dies (per-file stamps carry the truth for
-    // everything written since). The test is on the MATERIALIZED
-    // stamps, not the session: a pure rewrite by a foreign-zone ops
-    // session stamps its outputs with their input zone and must not
-    // cost untouched legacy files their derivation.
-    // The __unstamped__ sentinel is excluded: those files refuse
-    // derivation on their own stamp and need no record-drop — and
-    // dropping would cost untouched legacy files their derivation.
-    val propsOut = propsOut0.get(GraftTable.writerTzKey) match {
-      case Some(prop)
-        if newStats.values.exists(_.tz.exists(z =>
-          z != GraftTable.unstampedTz && !sameZone(prop, z))) =>
-        propsOut0 - GraftTable.writerTzKey
-      case _ => propsOut0
-    }
     // generation/identity specs are immutable after CREATE/CLONE
     val genOut = if (v == 0) generatedOpt
       else readCommit(base).generated
@@ -864,7 +831,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       p.carried.fold(state).fold(TableState.of(Map.empty, dropped))
     }
     writeCommit(Commit(v, tsOut, op, files.toList,
-      schemaJson, metrics, Some(carried ++ newStats),
+      schemaJson, metrics, carried ++ newStats,
       Some(constraintsOut),
       cdcFiles.map(_.toList),
       if (dvList.isEmpty) None else Some(dvList),
@@ -897,29 +864,15 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (latestVersion < 0) None
     else readCommit(latestVersion).identityCol
 
-  /** TABLE-LEVEL writer-zone record (CREATE-time session zone) —
-    * the fallback for files whose stats predate the PER-FILE zone
-    * stamp ([[FileStats.tz]]). New writes record their zone per
-    * commit instead, so sessions in different zones may all write:
-    * tz-dependent derivation ([[derivedGenConds]]) applies per FILE,
-    * only where the file's recorded zone matches the reader's.
-    * Absent on pre-feature/CONVERTed tables, where the materializing
-    * zone of legacy files is unknown — derivation stays off for them.
-    */
-  private def writerTimeZone: Option[String] =
-    if (latestVersion < 0) None
-    else readCommit(latestVersion).properties.getOrElse(Map.empty)
-      .get(GraftTable.writerTzKey)
-
   /** May tz-dependent derived conditions prune the file behind these
-    * stats? Only when its materialization zone is recorded (per-file
-    * stamp, else the CREATE-time table record) AND matches the
-    * session — otherwise the derived boundary was computed under a
-    * different clock and the file is kept unconditionally.
+    * stats? Only when its per-file zone stamp ([[FileStats.tz]]) is
+    * recorded AND matches the session — sessions in different zones
+    * may all write, and derivation ([[derivedGenConds]]) applies per
+    * FILE; a stood-down (unstamped) file was materialized under a
+    * clock no reader can vouch for and is kept unconditionally.
     */
   private[tables] def fileZoneOk(stats: Option[GraftTable.FileStats]): Boolean =
-    stats.flatMap(_.tz).orElse(writerTimeZone)
-      .exists(sameZone(_, sessionTz))
+    stats.flatMap(_.tz).exists(sameZone(_, sessionTz))
 
   private def sessionTz: String =
     spark.sessionState.conf.sessionLocalTimeZone
@@ -1286,7 +1239,6 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val pcols = c.partitionBy.getOrElse(Nil)
     require(pcols.nonEmpty, "not a partitioned table")
     val pv = c.partValues.getOrElse(Map.empty)
-    val stats = c.stats.getOrElse(Map.empty)
     // active DVs make per-file footer counts overcount (tombstones
     // rewrite nothing) — report null rather than phantom rows, the
     // same honesty rule as rowCount
@@ -1294,10 +1246,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     c.files.groupBy(f => pcols.map(p =>
         s"$p=${pv.get(f).flatMap(_.get(p)).getOrElse("?")}").mkString("/"))
       .map { case (tuple, files) =>
-        val rows = files.map(f => stats.get(f).flatMap(_.rows))
         (tuple, files.size.toLong,
-          if (dvActive || rows.exists(_.isEmpty)) null
-          else java.lang.Long.valueOf(rows.flatten.sum))
+          if (dvActive) null
+          else java.lang.Long.valueOf(files.map(c.stats(_).rows).sum))
       }.toSeq.sortBy(_._1)
       .toDF("partition", "num_files", "num_rows")
   }
@@ -1308,18 +1259,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * (O(dv), orders of magnitude smaller than the data it masks),
     * NEVER a data scan. The maintenance-metadata twin of
     * [[partitionsInfo]], whose row counts go null under live DVs.
-    * None when any live file lacks footer stats (pre-stats legacy
-    * commits) — the caller falls back to its scan.
     */
-  private[graft] def partitionRowCountsDvAdjusted()
-      : Option[Seq[Long]] = {
+  private[graft] def partitionRowCountsDvAdjusted(): Seq[Long] = {
     val c = readCommit(latestVersion)
     val pcols = c.partitionBy.getOrElse(Nil)
     require(pcols.nonEmpty, "not a partitioned table")
     val pv = c.partValues.getOrElse(Map.empty)
-    val stats = c.stats.getOrElse(Map.empty)
-    if (c.files.exists(f => stats.get(f).flatMap(_.rows).isEmpty))
-      return None
     // distinct tombstones per masked file — dvPairFrame's dedup is
     // the same dedup the scan mask applies, so the subtraction agrees
     // with what a groupBy-count over the masked snapshot would return
@@ -1328,13 +1273,13 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       else dvPairFrame(dvAt(latestVersion))
         .groupBy(col("__fp")).count().collect()
         .map(r => normPath(r.getString(0)) -> r.getLong(1)).toMap
-    Some(c.files
+    c.files
       .groupBy(f => pcols.map(p =>
         pv.get(f).flatMap(_.get(p)).getOrElse("?")).mkString("/"))
       .map { case (_, fs) =>
-        fs.map(f => stats(f).rows.get -
+        fs.map(f => c.stats(f).rows -
           tomb.getOrElse(normPath(abs(f)), 0L)).sum
-      }.toSeq)
+      }.toSeq
   }
 
   /** FSCK analog: reconcile the commit log against the filesystem.
@@ -1568,7 +1513,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   def snapshotPruned(key: String, lo: Double, hi: Double): DataFrame = {
     val c = readCommit(latestVersion)
     val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson).asInstanceOf[StructType]
-    val stats = c.stats.getOrElse(Map.empty)
+    val stats = c.stats
     // footer stats are keyed by PHYSICAL column name
     val pk = physName(c.columnMap.getOrElse(Map.empty), key)
     val keep = c.files.filter { f =>
@@ -1598,7 +1543,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   private[graft] def filesPrunedIn(key: String,
       sortedValues: Array[Double]): Seq[String] = {
     val c = readCommit(latestVersion)
-    val stats = c.stats.getOrElse(Map.empty)
+    val stats = c.stats
     val pk = physName(c.columnMap.getOrElse(Map.empty), key)
     def anyIn(lo: Double, hi: Double): Boolean = {
       // first value >= lo; in-range iff it also <= hi
@@ -1870,7 +1815,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val schema = org.apache.spark.sql.types.DataType.fromJson(c.schemaJson)
       .asInstanceOf[StructType]
     GraftTable.SnapshotInfo(c.files.map(abs),
-      c.stats.getOrElse(Map.empty).map { case (f, s) => abs(f) -> s }, schema,
+      c.stats.map { case (f, s) => abs(f) -> s }, schema,
       c.partitionBy.getOrElse(Nil),
       c.partValues.getOrElse(Map.empty).map { case (f, m) => abs(f) -> m })
   }
@@ -2412,7 +2357,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           org.apache.spark.sql.catalyst.expressions.Literal
             .create(e.eval(), e.dataType)
       })
-      val stats = c.stats.getOrElse(Map.empty)
+      val stats = c.stats
       val pv = c.partValues.getOrElse(Map.empty)
       val pcols = c.partitionBy.getOrElse(Nil)
       // generated-column partition pruning (Delta's feature): bounds
@@ -3045,11 +2990,24 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
         s"cannot MERGE on identity column '$idc': matching would need " +
           "source-supplied ids; model the key on a business column")
     }
+    // the source row rides the clause join as the struct `__src`: a
+    // matched clause's `src.<col>` re-points to it, so a bare `src`
+    // stays free to name a target column of that name
+    val targetHasSrc = schema.fieldNames.exists(_.equalsIgnoreCase("src"))
+    def toSrc(c: Column): Column = org.apache.spark.sql.GraftPlans.column(
+      org.apache.spark.sql.GraftPlans.expression(c).transformUp {
+        case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+            if a.nameParts.head.equalsIgnoreCase("src") &&
+              (a.nameParts.length > 1 || !targetHasSrc) =>
+          org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute(
+            "__src" +: a.nameParts.tail)
+      })
     // typo'd clause assignment keys fail loudly, like UPDATE's
     val matched = matched0.map {
-      case MatchedUpdate(c, Some(m)) =>
-        MatchedUpdate(c, Some(resolveAssignments(schema, m, "MERGE UPDATE SET")))
-      case other => other
+      case MatchedUpdate(c, m) =>
+        MatchedUpdate(c.map(toSrc), m.map(a => resolveAssignments(schema,
+          a.map { case (k, v) => k -> toSrc(v) }, "MERGE UPDATE SET")))
+      case MatchedDelete(c) => MatchedDelete(c.map(toSrc))
     }
     val notMatched = notMatched0.map {
       case NotMatchedInsert(c, Some(m)) =>
@@ -3232,11 +3190,11 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // source match as a struct; clause resolution is pure projection
     val srcStruct = src.select(keys.zipWithIndex.map { case (k, i) =>
       col(k).as(s"__sk$i") } :+
-      struct(src.columns.map(col): _*).as("src"): _*)
+      struct(src.columns.map(col): _*).as("__src"): _*)
     val joined = tgtRows.join(srcStruct,
       keys.zipWithIndex.map { case (k, i) => col(k) === col(s"__sk$i") }
         .reduce(_ && _), "left")
-    val isMatched = col("src").isNotNull
+    val isMatched = col("__src").isNotNull
     // one action index space: matched clauses first, BY SOURCE
     // clauses after (offset by matched.length) — declaration order,
     // first condition that holds wins, within each branch
@@ -3292,12 +3250,12 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           // evolution's SET * expands over the SOURCE columns (Delta
           // semantics): a target-only column keeps its value
           case None if evolveSchema && !srcHas(f) => col(f)
-          case None => col(s"src.$f").cast(schema(f).dataType)
+          case None => col("__src").getField(f).cast(schema(f).dataType)
           case Some(m) => m.getOrElse(f, col(f))
         }
         (i, v)
       } ++ bySource.zipWithIndex.collect {
-        // BY SOURCE SET values are target-context (src is null here)
+        // BY SOURCE SET values are target-context (no source row)
         case (BySourceUpdate(_, m), j) =>
           (matched.length + j,
             m.getOrElse(f, col(f)).cast(schema(f).dataType))
@@ -3479,20 +3437,16 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * every output file stays single-zone and keeps its derivation
     * stamp (a cross-zone merge would have to stand down, silently
     * degrading generated-column pruning after routine maintenance).
-    * None = take the ordinary single-write path: no tz-dependent
-    * gens, single-zone inputs (the common case — the per-partition
-    * verdict already preserves the zone), or any input with an
-    * unknown zone (conservative fall-back).
+    * Stood-down (unstamped) inputs form their own group, whose
+    * outputs stay unstamped. None = take the ordinary single-write
+    * path: no tz-dependent gens, or single-zone inputs (the common
+    * case — the per-partition verdict already preserves the zone).
     */
   private def binpackZoneGroups(inputs: Seq[String],
-      base: Long): Option[Map[String, Seq[String]]] = {
+      base: Long): Option[Map[Option[String], Seq[String]]] = {
     if (tzDependentGens.isEmpty || inputs.size < 2 || base < 0) return None
-    val stats = readCommit(base).stats.getOrElse(Map.empty)
-    val prop = writerTimeZone
-    val zones = inputs.map(f => f -> stats.get(f).flatMap(_.tz).orElse(prop))
-    if (zones.exists(_._2.isEmpty)) return None
-    val grouped = zones.groupBy(_._2.get)
-      .map { case (z, fs) => z -> fs.map(_._1) }
+    val stats = readCommit(base).stats
+    val grouped = inputs.groupBy(f => stats.get(f).flatMap(_.tz))
     // distinct SPELLINGS of the same clock stay separate groups —
     // harmless (each group's stamp is its own recorded spelling,
     // which sameZone resolves at read time)
@@ -3504,7 +3458,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * with ITS group's zone — per-file stats via the genZoneFor
     * collect. Returns (files, partValues, stats) for the commit.
     */
-  private def binpackGrouped(groups: Map[String, Seq[String]],
+  private def binpackGrouped(groups: Map[Option[String], Seq[String]],
       base: Long, totalOutFiles: Int)
       : (Seq[String], Map[String, Map[String, String]],
          Map[String, GraftTable.FileStats]) = {
@@ -3527,7 +3481,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     val zoneOf = written.flatMap { case (z, w) =>
       w.files.map(_ -> z)
     }.toMap
-    (files, pv, collectStats(files, f => zoneOf.get(f)))
+    (files, pv, collectStats(files, zoneOf))
   }
 
   /** OPTIMIZE analog: coalesce the snapshot into `numFiles` files
@@ -3551,10 +3505,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     if (!hasDvs(base)) {
       val c = readCommit(base)
       val pv = c.partValues.getOrElse(Map.empty)
-      val stats = c.stats.getOrElse(Map.empty)
       val zoneOf: String => Option[String] =
         if (tzDependentGens.isEmpty) _ => None
-        else f => stats.get(f).flatMap(_.tz).orElse(writerTimeZone)
+        else f => c.stats.get(f).flatMap(_.tz)
       val floor = filesAt(base)
         .map(f => (zoneOf(f), pv.get(f))).distinct.size
       if (filesAt(base).size <= math.max(numFiles, floor)) return base
@@ -3662,15 +3615,15 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     // (requestedFiles), so a GENUINE finer-split request
     // (clusterBy(16) after clusterBy(4)) still rewrites — as does a
     // fresh under-target layout from any other op (compact(1) then
-    // clusterBy(8)) or a pre-metric legacy CLUSTER commit.
-    // Multi-key or stats-less layouts rewrite as before.
+    // clusterBy(8)). Multi-key layouts, or a key without numeric
+    // stats, rewrite as before.
     if (keys.size == 1 && !hasDvs(base) &&
         (filesAt(base).size == numFiles ||
           (filesAt(base).size < numFiles &&
             readCommit(base).operation == "CLUSTER" &&
             readCommit(base).metrics
               .getOrElse("requestedFiles", -1L) >= numFiles))) {
-      val stats = readCommit(base).stats.getOrElse(Map.empty)
+      val stats = readCommit(base).stats
       val ranges = filesAt(base).flatMap(f => stats.get(f).flatMap(s =>
         for (mn <- s.mins.get(keys.head); mx <- s.maxs.get(keys.head))
           yield (mn, mx)))
@@ -3796,7 +3749,7 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
       // their stats (no pruning) and partition values (excluded from
       // dynamic partition overwrite — stale-row correctness, not
       // just perf)
-      newStats = c.stats.getOrElse(Map.empty),
+      newStats = c.stats,
       // the restored STATE includes that version's deletion vectors
       dv = Some(c.dv.getOrElse(Nil)),
       newPartValues = c.partValues.getOrElse(Map.empty),
@@ -4015,8 +3968,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
     * batch carries the CHANGE SET, not the rewritten files, so the
     * bill is the write-time cdc payload when one was recorded (a
     * wholesale COW DELETE's tiny change feed must not consume a
-    * budget sized for its rewrite); appends and legacy commits fall
-    * back to added-file bytes — for appends that IS the change set.
+    * budget sized for its rewrite); commits without a change set
+    * (appends, overwrites) fall back to added-file bytes — for
+    * appends that IS the change set.
     */
   private[graft] def billableBytesIn(version: Long,
       skipChangeCommits: Boolean, cdcMode: Boolean = false): Long = {
@@ -4126,25 +4080,21 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
   /** Row-level CDC change feed (Delta CHANGE DATA FEED analog).
     * Every emitted row carries `_change_type` and `_commit_version`.
     *
-    * DML commits (DELETE/UPDATE/MERGE) persist their change set at
-    * WRITE time under `cdc/` (Delta's CDF files) — the feed just
-    * reads those, no reconstruction, and MERGE rows carry exact
-    * `insert`/`update_*`/`delete` tags. Commits without CDC files
-    * (appends; tables written before CDC; OVERWRITE/RESTORE) fall
-    * back to the file-diff reconstruction: `added` = files new in v,
-    * `removed` = files dropped from v−1; unchanged rows inside
-    * rewritten files appear in both sides and cancel under multiset
-    * EXCEPT ALL — cost scales with the commit's blast radius, not
-    * table size. Fallback change types by op:
+    * DML commits (DELETE, UPDATE, MERGE, their `_DV` forms,
+    * REPLACE_WHERE, OVERWRITE_PARTITIONS) and the metadata commits
+    * persist their change set at WRITE time under `cdc/` (Delta's CDF
+    * files) — the feed just reads those, no reconstruction, with
+    * exact `insert`/`update_*`/`delete` tags. Commits without CDC
+    * files fall back to the file-diff reconstruction: `added` = files
+    * new in v, `removed` = files dropped from v−1; unchanged rows
+    * inside rewritten files appear in both sides and cancel under
+    * multiset EXCEPT ALL — cost scales with the commit's blast
+    * radius, not table size. Fallback change types by op:
     *  - CREATE/APPEND → `insert` (added files ARE the change set)
-    *  - DELETE → `delete`
-    *  - UPDATE → `update_preimage` / `update_postimage`
-    *  - MERGE → `update_preimage` for replaced rows, `upsert` for
-    *    new-or-updated rows (file diffs alone can't split matched
-    *    updates from inserts)
-    *  - OVERWRITE/RESTORE → `delete` + `insert` of the content diff
     *  - COMPACT/CLUSTER/ZORDER/ADD CONSTRAINT → no logical change,
     *    nothing emitted
+    *  - OVERWRITE/RESTORE (and CONVERT/CLONE, whose parent is empty)
+    *    → `delete` + `insert` of the content diff
     */
   def changeFeed(fromVersion: Long): DataFrame =
     changeFeed(fromVersion, latestVersion)
@@ -4251,18 +4201,9 @@ class GraftTable private (val spark: SparkSession, val root: Path) {
           }
         }
         cur.operation match {
-          case "COMPACT" | "CLUSTER" | "ZORDER" | "ADD CONSTRAINT" |
-               "RENAME COLUMN" | "DROP COLUMN" => Nil
+          case "COMPACT" | "CLUSTER" | "ZORDER" | "ADD CONSTRAINT" => Nil
           case "CREATE" | "APPEND" =>
             if (added.isEmpty) Nil else Seq(tag(addRows, "insert", v, cmV))
-          case "DELETE" =>
-            Seq(tag(remRows.exceptAll(addRows), "delete", v, cmV))
-          case "UPDATE" =>
-            Seq(tag(remRows.exceptAll(addRows), "update_preimage", v, cmV),
-              tag(addRows.exceptAll(remRows), "update_postimage", v, cmV))
-          case "MERGE" =>
-            Seq(tag(remRows.exceptAll(addRows), "update_preimage", v, cmV),
-              tag(addRows.exceptAll(remRows), "upsert", v, cmV))
           case _ => // OVERWRITE, RESTORE, anything content-changing
             Seq(tag(remRows.exceptAll(addRows), "delete", v, cmV),
               tag(addRows.exceptAll(remRows), "insert", v, cmV)) ++ dvDelta
@@ -4443,26 +4384,10 @@ object GraftTable {
   private[graft] val maintenanceOps: Set[String] =
     Set("COMPACT", "CLUSTER", "ZORDER", "PURGE")
 
-  /** Table property recording the zone tz-dependent generated values
-    * were materialized under (see [[GraftTable.writerTimeZone]]).
-    */
-  private[tables] val writerTzKey = "graft.writerTimeZone"
-
-  /** Sentinel recorded as a file's zone stamp when the write
-    * INTENTIONALLY stands down (a rewrite carrying rows materialized
-    * under disagreeing zones, or mixing carried values with
-    * session-clock recomputes). Distinct from an ABSENT stamp
-    * (pre-feature file), which may still be vouched for by the
-    * table-level CREATE-zone record: the sentinel never equals any
-    * real zone, so [[GraftTable.fileZoneOk]] keeps such files
-    * unconditionally instead of letting the fallback wrongly enable
-    * tz-derived pruning over foreign-zone-materialized values.
-    */
-  private[tables] val unstampedTz = "__unstamped__"
-
   /** Names the DML and change-feed paths add to frames that carry a
     * table's schema: the staging tag and partition copies, UPDATE's
-    * hit marker and pre-images, MERGE's action index, row addresses,
+    * hit marker and pre-images, MERGE's action index and source row,
+    * row addresses,
     * the Z-order key and the feed's change columns. Those paths would
     * overwrite or drop a user column of such a name, so no table may
     * hold one: CREATE, CONVERT, OVERWRITE, RENAME COLUMN and schema
@@ -4470,7 +4395,7 @@ object GraftTable {
     * resolution).
     */
   private val reservedNames = Set("_change_type", "_commit_version",
-    "__tag", "__hit", "__action", "__fp", "__pos", "__file", "__z")
+    "__tag", "__hit", "__action", "__fp", "__pos", "__file", "__z", "__src")
   private val reservedPrefixes = Seq("__gp_", "__pre_")
 
   private[tables] def requireUnreserved(names: Seq[String]): Unit = {
@@ -4530,21 +4455,21 @@ object GraftTable {
   /** Per-file column stats: numeric [min,max] plus string [min,max]
     * compared in UTF-8 byte order via [[utf8Cmp]] (exact for every
     * string; only over-long values are dropped, as a truncated max
-    * would mis-prune). Older commit logs lack the string maps —
-    * json4s defaults them to None.
+    * would mis-prune), and the footer's exact row count. Every data
+    * file a commit lists has an entry.
     */
   private[graft] case class FileStats(mins: Map[String, Double],
       maxs: Map[String, Double],
-      smins: Option[Map[String, String]] = None,
-      smaxs: Option[Map[String, String]] = None,
-      rows: Option[Long] = None,
+      smins: Option[Map[String, String]],
+      smaxs: Option[Map[String, String]],
+      rows: Long,
       // session timezone this file's rows (and any generated
       // partition values) were MATERIALIZED under — the per-commit
       // writer-zone record that lets multi-zone writers coexist:
       // tz-dependent generated-column derivation applies per file,
-      // only where the recorded zone matches the reader. Absent on
-      // pre-feature logs (falls back to the table-level record).
-      tz: Option[String] = None)
+      // only where the recorded zone matches the reader. Absent when
+      // the write stood down (see [[GraftTable.rewriteStampZone]]).
+      tz: Option[String])
 
   /** A resolved version snapshot for scan planning: absolute file
     * paths, their commit-log stats, and the schema to read with.
@@ -4606,7 +4531,7 @@ object GraftTable {
   private[tables] case class Commit(version: Long, timestampMs: Long,
       operation: String, files: List[String], schemaJson: String,
       metrics: Map[String, Long],
-      stats: Option[Map[String, FileStats]] = None,
+      stats: Map[String, FileStats] = Map.empty,
       constraints: Option[Map[String, String]] = None,
       cdc: Option[List[String]] = None,
       dv: Option[List[String]] = None,
@@ -4620,8 +4545,7 @@ object GraftTable {
       numBuckets: Option[Int] = None,
       // delta-encoded commit (checkpointing): `files` holds only the
       // commit's ADDS and `removes` the dropped names; resolution in
-      // [[GraftTable.readCommit]]. Absent on full commits (every
-      // pre-checkpointing log — read-compatible).
+      // [[GraftTable.readCommit]]. Absent on full commits.
       delta: Option[Boolean] = None,
       removes: Option[List[String]] = None,
       state: Option[TableState] = None,
@@ -4661,11 +4585,8 @@ object GraftTable {
       t
     }
     if (Files.exists(log)) return loadReady()
-    try {
-      val t = create(spark, path, df)
-      if (props.nonEmpty) t.setProperties(props)
-      t
-    } catch {
+    try create(spark, path, df, properties = props)
+    catch {
       case _: IllegalArgumentException | _: CommitConflictException
           if Files.exists(log) => loadReady()
     }
@@ -4675,7 +4596,8 @@ object GraftTable {
     * caller whose watermark must be transactional with the seed data
     * (the maintained-view create) lands both in ONE commit instead of
     * a create(empty)+overwrite pair (guide §1.2: one write job, one
-    * commit).
+    * commit). `properties` (TBLPROPERTIES) ride it the same way, so a
+    * table never exists without them.
     */
   def create(spark: SparkSession, path: String, df: DataFrame,
       partitionBy: Seq[String] = Nil,
@@ -4683,7 +4605,8 @@ object GraftTable {
       identity: Option[String] = None,
       bucketBy: Seq[String] = Nil,
       numBuckets: Int = 0,
-      marks: Map[String, Long] = Map.empty): GraftTable = {
+      marks: Map[String, Long] = Map.empty,
+      properties: Map[String, String] = Map.empty): GraftTable = {
     val root = Paths.get(path)
     val t = new GraftTable(spark, root)
     require(!Files.exists(t.logDir), s"table already exists at $path")
@@ -4724,21 +4647,6 @@ object GraftTable {
         .filterNot(seeded.schema.fieldNames.contains)
       require(missing.isEmpty,
         s"partitionBy/bucketBy names unknown column(s): ${missing.mkString(", ")}")
-      // tz-dependent generation (a TIMESTAMP input): record the
-      // materializing zone so readers can derive partition bounds
-      // under it and writers under any other zone are refused
-      val tzProp =
-        if (generated.exists { case (_, g) =>
-          (try spark.sessionState.sqlParser.parseExpression(g).collect {
-            case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute =>
-              a.nameParts.last
-          } catch { case scala.util.control.NonFatal(_) => Nil })
-            .exists(r => seeded.schema.fields.exists(f =>
-              f.name.equalsIgnoreCase(r) &&
-                f.dataType == org.apache.spark.sql.types.TimestampType))
-        }) Map(writerTzKey ->
-          spark.sessionState.conf.sessionLocalTimeZone)
-        else Map.empty[String, String]
       val w = t.writeData(seeded, partitionBy, Map.empty, bkSpec)
       // the log directory appears only AFTER the data write: a seed
       // job that fails must leave NO commitless `_graft_log` behind
@@ -4754,7 +4662,7 @@ object GraftTable {
         Map("numAddedFiles" -> w.files.size.toLong),
         t.collectStats(w.files),
         newPartValues = w.partValues,
-        newProperties = tzProp,
+        newProperties = properties,
         partitionByOpt = if (partitionBy.isEmpty) None else Some(partitionBy),
         generatedOpt = if (generated.isEmpty) None else Some(generated),
         identityOpt = identity,
@@ -4884,7 +4792,7 @@ object GraftTable {
     // absolute refs: Path.resolve passes absolute paths through, so
     // reads and DML on the clone address the source's files directly
     val absFiles = c.files.map(src.abs)
-    val absStats = c.stats.getOrElse(Map.empty).map {
+    val absStats = c.stats.map {
       case (f, s) => src.abs(f) -> s
     }
     t.commit("CLONE", -1L, absFiles,
@@ -4963,7 +4871,7 @@ object GraftTable {
         Map.empty,
         for { b <- c.bucketBy; n <- c.numBuckets } yield (b: Seq[String], n))
       val srcZone: Option[String] = {
-        val stats = c.stats.getOrElse(Map.empty)
+        val stats = c.stats
         val zones = c.files.map(f => stats.get(f).flatMap(_.tz))
         if (zones.exists(_.isEmpty)) None
         else {
@@ -5038,7 +4946,7 @@ object GraftTable {
       Map("sourceVersion" -> v,
         "numAddedFiles" -> c.files.size.toLong,
         "numCopiedBytes" -> copiedBytes),
-      c.stats.getOrElse(Map.empty).map { case (f, s) => mapping(f) -> s },
+      c.stats.map { case (f, s) => mapping(f) -> s },
       c.constraints.getOrElse(Map.empty),
       newPartValues = c.partValues.getOrElse(Map.empty).map {
         case (f, m) => mapping(f) -> m },

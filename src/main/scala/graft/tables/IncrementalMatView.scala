@@ -61,9 +61,7 @@ import org.apache.spark.sql.functions._
   * a broad UPDATE feeds its blast radius through, a trickle append
   * costs a trickle. The reflected source version is a watermark in
   * the view table's carried protocol state, so it is transactional with
-  * the view data and survives restarts; a MERGE whose feed falls
-  * back to ambiguous `upsert` tags (pre-CDC legacy commits) triggers
-  * a full recompute rather than a wrong delta.
+  * the view data and survives restarts.
   */
 class IncrementalMatView private (spark: SparkSession,
     val source: GraftTable, val mv: GraftTable,
@@ -97,22 +95,6 @@ class IncrementalMatView private (spark: SparkSession,
   private lazy val dimTables: Seq[(GraftTable, String, String, String)] =
     dims.map { case (p, fk, dk, jt) =>
       (GraftTable.load(spark, p), fk, dk, jt) }
-
-  /** Measures whose NON-NULL count (`m_nn_v`) is maintained: every
-    * measure for a view CREATED from this code on (the count is what
-    * lets a sum whose contributions all retired surface as NULL — a
-    * recompute's answer — instead of the signed fold's decimal
-    * zero), and whatever counts a LOADED view's stored schema
-    * actually holds (a legacy view maintained them only for its AVG
-    * measures, or not at all — its maintenance must keep folding the
-    * columns that exist).
-    */
-  private lazy val nnCols: Seq[String] =
-    if (mv == null) valueCols
-    else {
-      val cs = mv.snapshot().columns.toSet
-      valueCols.filter(v => cs.contains(s"m_nn_$v"))
-    }
 
   /** Project DERIVED key/measure columns (name → SQL expr over the
     * source row) onto a source-shaped frame — snapshots AND the
@@ -175,7 +157,7 @@ class IncrementalMatView private (spark: SparkSession,
     // per-measure NON-NULL COUNT (COUNT(v), not COUNT(*)): an abelian
     // aggregate folding with the same signed deltas as the sums;
     // backs AVG and the NULL-when-all-retired sum semantics
-    val nn = nnCols.map(v => count(col(v)).as(s"m_nn_$v"))
+    val nn = valueCols.map(v => count(col(v)).as(s"m_nn_$v"))
     // APPROX-DISTINCT measures: a mergeable HLL sketch (DataSketches
     // binary) per group — union-mergeable (abelian under ∪, so
     // insert-only feeds FOLD like SUM), but NOT invertible, so any
@@ -273,53 +255,26 @@ class IncrementalMatView private (spark: SparkSession,
     // extremes or approx measures every group folds; the affected
     // set is empty.
     val needsAffected = extremes || approxCols.nonEmpty
-    // ONE routing probe over the change feed (guide §1.2 — the old
-    // spelling ran three: an 'upsert' limit-probe, an affected
-    // limit-probe and the recompute's prune-head collect). The
-    // distinct (keys, is-upsert) head answers all three questions
-    // driver-side in the common ≤AffectedPruneCap case; only an
-    // overflowing head falls back to the explicit probes.
-    val affectedPlus =
+    // ONE routing probe over the change feed (guide §1.2): the
+    // distinct affected-key head answers "any affected group?" and,
+    // in the common ≤AffectedPruneCap case, doubles as the
+    // recompute's prune list driver-side.
+    val affected =
       if (!needsAffected) null
-      else feed.where(col("_change_type")
-          .isin("delete", "update_preimage", "upsert"))
-        .select((keys.map(col) :+
-          (col("_change_type") === "upsert").as("__ups")).toIndexedSeq: _*)
+      else feed.where(col("_change_type").isin("delete", "update_preimage"))
+        .select(keys.map(col): _*)
         .distinct()
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // a refresh losing a commit race (routine under CONTINUOUS) must
     // release the affected-set cache instead of stranding one entry
     // per retry
     try {
-    val head0: Array[org.apache.spark.sql.Row] =
+    val head: Array[org.apache.spark.sql.Row] =
       if (!needsAffected) Array.empty
-      else affectedPlus.limit(AffectedPruneCap + 1).collect()
-    val headComplete = needsAffected && head0.length <= AffectedPruneCap
-    // pre-CDC MERGE commits surface ambiguous 'upsert' rows (was it
-    // an update or an insert?) — a signed delta would double-count;
-    // recompute instead of guessing
-    val hasUpsert =
-      if (headComplete) head0.exists(_.getBoolean(keys.length))
-      else feed.where(col("_change_type") === "upsert")
-        .limit(1).count() > 0
-    if (hasUpsert) {
-      mv.overwrite(
-        nullableFrame(aggregateOf(prep(source.snapshotAt(to)))),
-        Map(SourceVersionKey -> to) ++ dimVersionMarks(dimVs))
-      applyRetention()
-      return to
-    }
-    // no upserts beyond this point: every head row is a delete/
-    // pre-image key, so the head doubles as the recompute's prune list
+      else affected.limit(AffectedPruneCap + 1).collect()
     val affectedHead =
-      if (headComplete) Some(head0) else None
-    val affected =
-      if (!needsAffected) spark.emptyDataFrame
-      else affectedPlus.where(!col("__ups")).drop("__ups")
-    val anyAffected = needsAffected &&
-      (if (headComplete) head0.nonEmpty
-       else head0.exists(!_.getBoolean(keys.length)) ||
-         affected.limit(1).count() > 0)
+      if (head.length <= AffectedPruneCap) Some(head) else None
+    val anyAffected = head.nonEmpty
     // NULL-SAFE affected-group routing: a Seq-based join drops
     // null-keyed groups on the floor (null = null is null), which
     // would FOLD a null-keyed group's deletion instead of recomputing
@@ -328,8 +283,8 @@ class IncrementalMatView private (spark: SparkSession,
     // source columns), so every anti/semi join here matches with <=>.
     def affKeyCond(df: DataFrame, aff: DataFrame): org.apache.spark.sql.Column =
       keys.map(k => df(k) <=> aff(s"__aff_$k")).reduce(_ && _)
-    // lazy: the no-extremes path holds an EMPTY frame here, whose
-    // zero columns cannot take the key names (and never need to)
+    // lazy: the no-extremes path holds no affected frame (and never
+    // needs one)
     lazy val affRenamed = affected.toDF(keys.map(k => s"__aff_$k"): _*)
     // rows whose group is NOT being recomputed fold as signed deltas
     // (with extremes, all such rows are positive — the negatives are
@@ -345,7 +300,7 @@ class IncrementalMatView private (spark: SparkSession,
           .cast("decimal(38,4)").as(s"m_min_$v"),
         max(when(sign > 0, dec38(col(v))))
           .cast("decimal(38,4)").as(s"m_max_$v")))
-    else Nil) ++ nnCols.map(v =>
+    else Nil) ++ valueCols.map(v =>
       sum(when(col(v).isNotNull, sign).otherwise(0))
         .cast("long").as(s"m_nn_$v")) ++ approxCols.map(v =>
       // positive rows only (negatives define affected groups, which
@@ -367,7 +322,7 @@ class IncrementalMatView private (spark: SparkSession,
       valueCols.flatMap(v => Seq(
         min(col(s"m_min_$v")).cast("decimal(38,4)").as(s"m_min_$v"),
         max(col(s"m_max_$v")).cast("decimal(38,4)").as(s"m_max_$v")))
-    else Nil) ++ nnCols.map(v =>
+    else Nil) ++ valueCols.map(v =>
       sum(col(s"m_nn_$v")).cast("long").as(s"m_nn_$v")) ++
       approxCols.map(v =>
         hll_union_agg(col(s"m_hll_$v")).as(s"m_hll_$v"))
@@ -396,7 +351,7 @@ class IncrementalMatView private (spark: SparkSession,
     mv.overwrite(nullableFrame(merged),
       Map(SourceVersionKey -> to) ++ dimVersionMarks(dimVs))
     } finally {
-      if (affectedPlus != null) affectedPlus.unpersist(): Unit
+      if (affected != null) affected.unpersist(): Unit
     }
     applyRetention()
     to
@@ -427,15 +382,12 @@ class IncrementalMatView private (spark: SparkSession,
     */
   private def outCol(kind: String, v: String): org.apache.spark.sql.Column =
     kind match {
-      // where the non-null count is maintained (every view created
-      // from this code on; legacy views only where their schema has
-      // it), a sum whose every non-null contribution retired
-      // surfaces as NULL — what SUM over the all-null remainder
-      // recomputes to — instead of the signed fold's decimal zero
-      case "sum" if nnCols.contains(v) =>
+      // a sum whose every non-null contribution retired surfaces as
+      // NULL — what SUM over the all-null remainder recomputes to —
+      // instead of the signed fold's decimal zero
+      case "sum" =>
         when(col(s"m_nn_$v") > 0,
           round(col(s"m_sum_$v"), 4).cast("double")).as(s"sum_$v")
-      case "sum" => round(col(s"m_sum_$v"), 4).cast("double").as(s"sum_$v")
       // NULL, not NaN, when the group's non-null count folded to 0
       // (every non-null value deleted while null-valued rows keep the
       // group alive): the signed sum cancels to decimal ZERO — not
@@ -535,8 +487,6 @@ object IncrementalMatView {
     s.split(",").toSeq.filter(_.nonEmpty).map { parts =>
       parts.split(":").map(x => new String(dec.decode(x), "UTF-8")) match {
         case Array(p, fk, dk, jt) => (p, fk, dk, jt)
-        // pre-join-type views (3 parts) were always LEFT joins
-        case Array(p, fk, dk) => (p, fk, dk, "left")
         case other => throw new IllegalArgumentException(
           s"corrupt dim definition: ${other.mkString(":")}")
       }

@@ -18,6 +18,13 @@ object GraftPlans {
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
 
+  /** The Catalyst expression tree behind a public Column, converted
+    * eagerly (ExpressionUtils.expression defers the conversion behind
+    * an opaque leaf, which a tree rewrite cannot see into).
+    */
+  def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
+    classic.ColumnNodeToExpressionConverter(c.node)
+
   /** Build a DataFrame flagged `isStreaming=true` from already-planned
     * InternalRows — what a V1 streaming Source's getBatch must return
     * (MicroBatchExecution asserts the flag). Same shape MemoryStream

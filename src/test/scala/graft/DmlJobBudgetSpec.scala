@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import graft.tables.GraftTable
+import graft.tables.{GraftTable, IncrementalMatView}
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -20,7 +20,8 @@ import org.json4s.jackson.JsonMethods
   * budget may only go down. The CDC files a commit records are
   * budgeted too: their count follows the write tasks that hold change
   * rows, so a partitioned table, whose DML touches one file per
-  * partition, writes more of them than a plain one.
+  * partition, writes more of them than a plain one. The jobs of one
+  * maintained-view refresh are budgeted the same way.
   */
 class DmlJobBudgetSpec extends SparkSpec {
   import spark.implicits._
@@ -61,6 +62,11 @@ class DmlJobBudgetSpec extends SparkSpec {
     ("mapped", "updateMor") -> (2, 8, 2),
     ("mapped", "mergeMor") -> (2, 26, 3))
 
+  /** view kind -> jobs of one refresh after an UPDATE of its source. */
+  private val refreshBudgets: Map[String, Int] = Map(
+    "sum" -> 3,
+    "extremes" -> 10)
+
   private final class Counter extends SparkListener with QueryExecutionListener {
     @volatile var jobs = 0
     @volatile var writes = 0
@@ -83,6 +89,24 @@ class DmlJobBudgetSpec extends SparkSpec {
     JsonMethods.parse(Files.readString(c)) \ "cdc" match {
       case JArray(fs) => fs.size
       case _ => 0
+    }
+  }
+
+  /** (write commands, jobs) of `body`. */
+  private def measure(body: => Any): (Int, Int) = {
+    val counter = new Counter
+    val sc = spark.sparkContext
+    sc.addSparkListener(counter)
+    spark.listenerManager.register(counter)
+    try {
+      ListenerBusDrain(sc)
+      counter.jobs = 0; counter.writes = 0
+      body
+      ListenerBusDrain(sc)
+      (counter.writes, counter.jobs)
+    } finally {
+      spark.listenerManager.unregister(counter)
+      sc.removeSparkListener(counter)
     }
   }
 
@@ -111,29 +135,37 @@ class DmlJobBudgetSpec extends SparkSpec {
         Seq("overwritePartitions" -> (() =>
           t.overwritePartitions(rows(v, 500L, 504L))))
       else Nil)
-    val counter = new Counter
-    val sc = spark.sparkContext
-    sc.addSparkListener(counter)
-    spark.listenerManager.register(counter)
-    try ops.foreach { case (op, body) =>
-      ListenerBusDrain(sc)
-      counter.jobs = 0; counter.writes = 0
-      body()
-      ListenerBusDrain(sc)
-      val (w, j, c) = (counter.writes, counter.jobs, cdcFiles(path, t))
+    ops.foreach { case (op, body) =>
+      val (w, j) = measure(body())
+      val c = cdcFiles(path, t)
       println(f"budget $layout%-12s $op%-20s writes=$w%d jobs=$j%d " +
         f"cdcFiles=$c%d")
       val (bw, bj, bc) = budgets((layout, op))
       assert(w <= bw, s"$layout $op: $w write commands, budget $bw")
       assert(j <= bj, s"$layout $op: $j jobs, budget $bj")
       assert(c <= bc, s"$layout $op: $c CDC files, budget $bc")
-    } finally {
-      spark.listenerManager.unregister(counter)
-      sc.removeSparkListener(counter)
     }
   }
 
   Seq("plain", "partitioned", "bucketed", "mapped").foreach { layout =>
     test(s"DML write-job budget: $layout table") { run(layout) }
+  }
+
+  test("view refresh job budget: a sum-only and an extremes view") {
+    val dir = Files.createTempDirectory("graft_budget_mv")
+    val src = GraftTable.create(spark, dir.resolve("src").toString, seed("x"))
+    val views = Seq(
+      "sum" -> IncrementalMatView.create(spark, src,
+        dir.resolve("sum").toString, Seq("k"), Seq("x"), extremes = false),
+      "extremes" -> IncrementalMatView.create(spark, src,
+        dir.resolve("ext").toString, Seq("k"), Seq("x"), extremes = true))
+    src.update($"id" === 50, Map("x" -> lit(-1.0)))
+    views.foreach { case (kind, view) =>
+      val (_, j) = measure(view.refresh())
+      println(f"budget view $kind%-10s refresh jobs=$j%d")
+      assert(view.reflectedVersion === src.latestVersion)
+      assert(j <= refreshBudgets(kind),
+        s"$kind view refresh: $j jobs, budget ${refreshBudgets(kind)}")
+    }
   }
 }

@@ -363,13 +363,13 @@ class GeneratedColumnsSpec extends SparkSpec {
     } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
   }
 
-  test("mixed-zone rewrites stand down derivation; the legacy record drops") {
+  test("mixed-zone writes keep per-partition zone stamps through " +
+      "compaction; the zone lives only in per-file stamps") {
     val ti = GraftTable.create(spark, tmp(),
       Seq(("2020-06-01 10:00:00", 1L), ("2021-06-01 12:00:00", 2L))
         .toDF("s", "v").select($"s".cast("timestamp").as("ts"), $"v"),
       partitionBy = Seq("y"),
       generated = Map("y" -> "year(ts)"))
-    assert(ti.properties.contains("graft.writerTimeZone"))
     val tzBefore = spark.conf.get("spark.sql.session.timeZone")
     try {
       spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
@@ -377,10 +377,8 @@ class GeneratedColumnsSpec extends SparkSpec {
       ti.append(Seq(("2022-01-01 05:00:00", 3L)).toDF("s", "v")
         .select($"s".cast("timestamp").as("ts"), $"v"))
     } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
-    // the mismatched-zone write dropped the CREATE-time record: the
-    // table-level fallback must not vouch for unstamped files anymore
-    assert(!ti.properties.contains("graft.writerTimeZone"),
-      "legacy zone record must drop once a second zone writes")
+    // no table-level zone record: every file carries its own stamp
+    assert(!ti.properties.contains("graft.writerTimeZone"))
     // COMPACT never merges across partitions, so each output keeps
     // ITS partition's input zone — stamps survive routine maintenance
     // on a multi-zone table instead of standing down wholesale
@@ -401,15 +399,15 @@ class GeneratedColumnsSpec extends SparkSpec {
       "the y=2022 (Tokyo-materialized) file must stay un-prunable")
   }
 
-  test("a foreign-zone UPDATE's unstamped outputs are never vouched " +
-      "for by the CREATE-zone record") {
+  test("a foreign-zone UPDATE's stood-down outputs carry no zone " +
+      "stamp and are never pruned by a UTC reader") {
     // Both rows land in partition y=2021 under the UTC create session.
     val ti = GraftTable.create(spark, tmp(),
       Seq(("2021-06-01 10:00:00", 1L), ("2021-12-31 20:00:00", 2L))
         .toDF("s", "v").select($"s".cast("timestamp").as("ts"), $"v"),
       partitionBy = Seq("y"),
       generated = Map("y" -> "year(ts)"))
-    assert(ti.properties.contains("graft.writerTimeZone"))
+    val created = ti.snapshotInfo(ti.latestVersion).files.toSet
     val tzBefore = spark.conf.get("spark.sql.session.timeZone")
     try {
       spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
@@ -420,10 +418,13 @@ class GeneratedColumnsSpec extends SparkSpec {
       // Tokyo session values) — outputs are INTENTIONALLY unstamped.
       ti.update($"v" === 2L, Map("ts" -> $"ts"))
     } finally spark.conf.set("spark.sql.session.timeZone", tzBefore)
-    // The table-level UTC record survives (untouched legacy files
-    // keep their fallback) — but it must NOT vouch for the new files.
-    assert(ti.properties.contains("graft.writerTimeZone"),
-      "an unstamped rewrite must not cost legacy files the record")
+    // The rewrite's outputs record no zone: no reader can vouch for
+    // the clock their generated values were materialized under.
+    val info = ti.snapshotInfo(ti.latestVersion)
+    val rewritten = info.files.filterNot(created)
+    assert(rewritten.nonEmpty)
+    assert(rewritten.forall(f => info.stats(f).tz.isEmpty),
+      s"stood-down outputs must carry no stamp: ${rewritten.map(info.stats(_).tz)}")
     // The UTC reader's derived bound y <= 2021 must not prune the
     // y=2022 (Tokyo-materialized) file: it holds a 2021 ts row.
     assert(ti.snapshot().where($"ts" <=
@@ -456,14 +457,14 @@ class GeneratedColumnsSpec extends SparkSpec {
     // compaction must NOT merge across zones: the two UTC files pack
     // into one, the Tokyo file stays its own — and every output
     // keeps a REAL zone stamp. A cross-zone merge would have to
-    // stand down (sentinel), killing tz-derived pruning forever.
+    // stand down (no stamp), killing tz-derived pruning forever.
     ti.compact(1)
     val info = ti.snapshotInfo(ti.latestVersion)
     assert(info.files.size === 2,
       s"expected one file per zone, got ${info.files.size}")
     val zones = info.files.flatMap(f => info.stats.get(f).flatMap(_.tz)).toSet
     assert(zones.size === 2 && zones.contains("Asia/Tokyo") &&
-      !zones.exists(_.contains("unstamped")),
+      info.files.forall(info.stats(_).tz.isDefined),
       s"zone stamps must survive the regrouped compaction, got $zones")
     assert(ti.snapshot().count() === 3)
     // selective scans still prune at file granularity after the

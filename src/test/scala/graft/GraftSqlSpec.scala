@@ -1411,7 +1411,7 @@ class GraftSqlSpec extends SparkSpec {
         val lease = java.nio.file.Paths.get(root,
           "_continuous_lease.json")
         java.nio.file.Files.writeString(lease,
-          s"""{"owner":"dead-session","ts":${System.currentTimeMillis() - 3600000L}}""")
+          s"""{"owner":"dead-session","ts":${System.currentTimeMillis() - 3600000L},"staleMs":60000}""")
         val qC = regB.start(spark, root, "1 second")
         assert(qC.isActive, "stale lease must not block a restart")
         regB.stop(root)
@@ -1533,6 +1533,17 @@ class GraftSqlSpec extends SparkSpec {
         "stop of a dead query under a foreign lease must return false")
       assert(!java.nio.file.Files.exists(lease),
         "the foreign lease must be released")
+
+      // a lease without staleMs (an older release's) is unreadable:
+      // even an hour past any window it is never taken over
+      java.nio.file.Files.writeString(lease,
+        s"""{"owner":"old-session","ts":${System.currentTimeMillis() - 3600000L}}""")
+      val regF = new graft.tables.ContinuousRegistry
+      val eF = intercept[IllegalArgumentException] {
+        regF.start(spark, root, "1 second")
+      }
+      assert(eF.getMessage.contains("already running"), eF.getMessage)
+      java.nio.file.Files.delete(lease)
     } finally {
       spark.sql("DROP TABLE IF EXISTS gs_mvrace")
       spark.sql("DROP TABLE IF EXISTS gs_mvr")

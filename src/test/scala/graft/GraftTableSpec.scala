@@ -189,6 +189,30 @@ class GraftTableSpec extends SparkSpec {
     assert(out === Array((1L, 10L), (2L, 6L), (3L, 7L)))
   }
 
+  test("MERGE on a table with a `src` column: a bare src names the " +
+      "target column, src.<col> the source row") {
+    import graft.tables.GraftTable.{MatchedDelete, MatchedUpdate, NotMatchedInsert}
+    val t = GraftTable.create(spark, tmp(),
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "src"))
+    val source = Seq((2L, "B"), (3L, "C"), (4L, "D")).toDF("id", "src")
+    t.merge(source, Seq("id"),
+      Seq(MatchedDelete(Some(col("src") === "c")),
+        MatchedUpdate(Some(col("src.src") === "B"),
+          Some(Map("src" -> concat(col("src"), col("src.src")))))),
+      Some(NotMatchedInsert()))
+    assert(t.snapshot().as[(Long, String)].collect().toSet ===
+      Set((1L, "a"), (2L, "bB"), (4L, "D")))
+    // SET * and INSERT * take the source's `src` column
+    t.merge(Seq((1L, "z"), (5L, "e")).toDF("id", "src"), "id")
+    assert(t.snapshot().as[(Long, String)].collect().toSet ===
+      Set((1L, "z"), (2L, "bB"), (4L, "D"), (5L, "e")))
+    // the change feed of the first merge tags every row exactly
+    assert(t.changeFeed(0L, 1L).select($"id", $"src", $"_change_type")
+      .as[(Long, String, String)].collect().toSet === Set(
+        (2L, "b", "update_preimage"), (2L, "bB", "update_postimage"),
+        (3L, "c", "delete"), (4L, "D", "insert")))
+  }
+
   test("time travel reads pre-delete state; history records ops") {
     val t = GraftTable.create(spark, tmp(), Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     t.delete($"id" === 1)
@@ -350,33 +374,25 @@ class GraftTableSpec extends SparkSpec {
     assert(t.snapshot().count() === 20000)
   }
 
-  test("persisted CDC equals the file-diff reconstruction") {
-    val dir = tmp()
-    val t = GraftTable.create(spark, dir,
+  test("the change feed reads DML change sets as persisted and diffs " +
+      "file contents only for OVERWRITE and RESTORE") {
+    val t = GraftTable.create(spark, tmp(),
       Seq((1L, "a", 1.0), (2L, "b", 2.0), (3L, "c", 3.0)).toDF("id", "s", "x"))
-    t.update($"id" >= 2, Map("x" -> ($"x" * 10)))
-    t.delete($"id" === 1)
-    val persisted = t.changeFeed(0)
+    t.update($"id" >= 2, Map("x" -> ($"x" * 10)))                   // v1
+    t.delete($"id" === 1)                                             // v2
+    t.overwrite(Seq((2L, "b", 20.0), (4L, "d", 4.0)).toDF("id", "s", "x")) // v3
+    t.restore(1L)                                                     // v4
+    val feed = t.changeFeed(0)
       .select($"id", $"s", $"x", $"_change_type", $"_commit_version")
       .as[(Long, String, Double, String, Long)].collect().toSet
-    // strip the cdc pointers from every commit → the reader must fall
-    // back to the EXCEPT ALL reconstruction and produce the same feed
-    import scala.jdk.CollectionConverters._
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val logDir = java.nio.file.Paths.get(dir, "_graft_log")
-    java.nio.file.Files.list(logDir).iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".json")).foreach { p =>
-        val j = JsonMethods.parse(java.nio.file.Files.readString(p))
-        val stripped = j.removeField { case (k, _) => k == "cdc" }
-        java.nio.file.Files.writeString(p,
-          JsonMethods.compact(JsonMethods.render(stripped)))
-      }
-    val computed = GraftTable.load(spark, dir).changeFeed(0)
-      .select($"id", $"s", $"x", $"_change_type", $"_commit_version")
-      .as[(Long, String, Double, String, Long)].collect().toSet
-    assert(persisted === computed)
-    assert(persisted.nonEmpty)
+    assert(feed === Set(
+      (2L, "b", 2.0, "update_preimage", 1L), (2L, "b", 20.0, "update_postimage", 1L),
+      (3L, "c", 3.0, "update_preimage", 1L), (3L, "c", 30.0, "update_postimage", 1L),
+      (1L, "a", 1.0, "delete", 2L),
+      // unchanged rows inside rewritten files cancel out of the diff
+      (3L, "c", 30.0, "delete", 3L), (4L, "d", 4.0, "insert", 3L),
+      (4L, "d", 4.0, "delete", 4L), (1L, "a", 1.0, "insert", 4L),
+      (3L, "c", 30.0, "insert", 4L)))
   }
 
   test("change feed spans additive schema evolution (old commits pad nulls)") {

@@ -13,7 +13,9 @@ import org.json4s.jackson.JsonMethods
   * high water, MV source versions and retired physical column names —
   * is carried whole by every resolved commit: a reader gets it from
   * the latest commit, log cleanup only deletes, and DESCRIBE HISTORY
-  * shows operation metrics only.
+  * shows operation metrics only. Also the commit format the readers
+  * rely on: the stamp, per-file stats with row counts, and the change
+  * set of every DML commit.
   */
 class ProtocolStateSpec extends SparkSpec {
   import spark.implicits._
@@ -216,6 +218,78 @@ class ProtocolStateSpec extends SparkSpec {
     }
     assert(e.getMessage.contains(Paths.get(dir).toString), e.getMessage)
     assert(e.getMessage.contains("recreate the table"), e.getMessage)
+  }
+
+  /** The latest commit of `t` lists a FileStats entry for every file,
+    * holding that file's own row count; a DML commit (`dml`) also
+    * records its change set, so the change feed never diffs files.
+    */
+  private def assertCommitComplete(op: String, t: GraftTable,
+      dml: Boolean = false): Unit = {
+    val v = t.latestVersion
+    val info = t.snapshotInfo(v)
+    assert(info.files.nonEmpty, s"$op: no files to check")
+    info.files.foreach { f =>
+      val st = info.stats.get(f)
+      assert(st.isDefined, s"$op: no FileStats for $f")
+      assert(st.get.rows === spark.read.parquet(f).count(),
+        s"$op: FileStats row count of $f")
+    }
+    if (dml) assert(
+      (rawJson(t.root.toString, v) \ "cdc").isInstanceOf[JArray],
+      s"$op: commit $v records no change set")
+  }
+
+  test("every write op's commit lists each file's stats with its row " +
+      "count, and every DML commit records its change set") {
+    val t = GraftTable.create(spark, tmp(), spark.range(0, 40, 1, 2)
+      .select($"id", ($"id" % 4).as("k"), ($"id" * 1.0).as("x")))
+    assertCommitComplete("create", t)
+    def rows(ids: Long*) = ids.map(i => (i, i % 4, i * 2.0)).toDF("id", "k", "x")
+    def step(op: String, dml: Boolean = false)(body: => Any): Unit = {
+      val before = t.latestVersion
+      body
+      assert(t.latestVersion > before, s"$op committed nothing")
+      assertCommitComplete(op, t, dml)
+    }
+    step("append")(t.append(rows(40L, 41L)))
+    step("delete", dml = true)(t.delete($"id" < 2))
+    step("update", dml = true)(t.update($"id" === 5, Map("x" -> lit(-1.0))))
+    step("merge", dml = true)(t.merge(rows(6L, 100L), "id"))
+    step("replaceWhere", dml = true)(
+      t.replaceWhere($"id" >= 20 && $"id" < 23, rows(20L)))
+    step("deleteMor", dml = true)(t.deleteMor($"id" === 30))
+    step("updateMor", dml = true)(
+      t.updateMor($"id" === 31, Map("x" -> lit(-2.0))))
+    step("mergeMor", dml = true)(t.mergeMor(rows(32L, 101L), Seq("id")))
+    // deep clone of merge-on-read state materializes the masked rows
+    assertCommitComplete("deepClone (deletion vectors)",
+      GraftTable.deepClone(spark, t.root.toString, tmp()))
+    step("compact")(t.compact(1))
+    step("cluster")(t.clusterBy(3, "id"))
+    step("zorder")(t.clusterByZOrder(2, "id", "x"))
+    step("restore")(t.restore(2L))
+    step("overwrite")(t.overwrite(rows(1L, 2L, 3L)))
+    assertCommitComplete("shallowClone",
+      GraftTable.shallowClone(spark, t.root.toString, tmp()))
+    assertCommitComplete("deepClone",
+      GraftTable.deepClone(spark, t.root.toString, tmp()))
+
+    val p = GraftTable.create(spark, tmp(), rows(0L, 1L, 2L, 3L),
+      partitionBy = Seq("k"))
+    val pv = p.latestVersion
+    p.overwritePartitions(rows(1L, 5L))
+    assert(p.latestVersion > pv)
+    assertCommitComplete("overwritePartitions", p, dml = true)
+
+    val flat = Files.createTempDirectory("graft_state_conv_").resolve("d")
+    rows(0L, 1L, 2L).write.parquet(flat.toString)
+    assertCommitComplete("convert (flat)",
+      GraftTable.convert(spark, flat.toString))
+    val hive = Files.createTempDirectory("graft_state_conv_").resolve("d")
+    rows(0L, 1L, 2L, 3L).write.partitionBy("k").parquet(hive.toString)
+    assertCommitComplete("convert (hive)",
+      GraftTable.convert(spark, hive.toString))
   }
 
   test("RESTORE keeps watermarks: a landed batch replayed after a " +

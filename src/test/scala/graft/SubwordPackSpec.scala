@@ -727,41 +727,29 @@ class SubwordPackSpec extends SparkSpec {
     assert(incC === recC)
   }
 
-  test("packTokensIngest meta backfill CROSS-CHECKS the candidate " +
-      "seqLen against landed fragment geometry: the wrong length " +
-      "refuses instead of pinning a corrupt constant") {
+  test("packTokensIngest refuses a pack whose meta sidecar is missing " +
+      "— its constants are unknown, so it must be recreated") {
     val docs = Tables.load(spark, sf, "documents")
-    val p = java.nio.file.Files.createTempDirectory("graft_bfill_")
+    val p = java.nio.file.Files.createTempDirectory("graft_nometa_")
     operators.TextAnalysis.packTokensIngest(spark, p.toString,
       docs.where($"doc_id" < 170), 0L, 128L)
-    // simulate a pre-meta-era pack: drop the sidecar
+    val frags = java.nio.file.Paths.get(p.toString, "fragments").toString
+    val landed = graft.tables.GraftTable.load(spark, frags).latestVersion
     val meta = java.nio.file.Paths.get(p.toString, "_pack_meta.json")
     java.nio.file.Files.delete(meta)
-    // a sidecar-less pack predates the vp measure — a vp arrival
-    // must refuse instead of pinning subword semantics onto the
-    // ws-bound offsets (and then refusing every correct ws batch)
-    val eVp = intercept[IllegalArgumentException] {
-      operators.TextAnalysis.packTokensIngest(spark, p.toString,
-        docs.where($"doc_id" >= 170), 1L, 128L, tokenizer = "vp")
+    // neither measure, nor the pack's own seq_len, adopts the pack
+    Seq(("ws", 128L), ("ws", 64L), ("vp", 128L)).foreach { case (tok, len) =>
+      val e = intercept[IllegalArgumentException] {
+        operators.TextAnalysis.packTokensIngest(spark, p.toString,
+          docs.where($"doc_id" >= 170), 1L, len, tokenizer = tok)
+      }
+      assert(e.getMessage.contains(p.toString) &&
+        e.getMessage.contains("recreate the pack"), e.getMessage)
     }
-    assert(eVp.getMessage.contains("predates the vp measure"),
-      eVp.getMessage)
     assert(!java.nio.file.Files.exists(meta),
-      "a refused vp backfill must not leave a sidecar behind")
-    // a replay arriving with the WRONG seqLen must refuse the pin
-    val err = intercept[IllegalArgumentException] {
-      operators.TextAnalysis.packTokensIngest(spark, p.toString,
-        docs.where($"doc_id" < 170), 0L, 64L)
-    }
-    assert(err.getMessage.contains("geometry"), err.getMessage)
-    assert(!java.nio.file.Files.exists(meta),
-      "a refused backfill must not leave a sidecar behind")
-    // the RIGHT seqLen re-pins and the replay lands nothing new
-    operators.TextAnalysis.packTokensIngest(spark, p.toString,
-      docs.where($"doc_id" < 170), 0L, 128L)
-    assert(java.nio.file.Files.exists(meta))
-    assert(operators.TextAnalysis.readPackMeta(spark, meta)
-      .getLong(2) === 128L)
+      "a refused batch must not write a sidecar")
+    assert(graft.tables.GraftTable.load(spark, frags).latestVersion === landed,
+      "a refused batch must land nothing")
   }
 
   test("DESCRIBE PACK serves a zero-sequence incremental pack (every " +
